@@ -95,10 +95,6 @@ def main():
         if args.explain_dir:
             os.makedirs(args.explain_dir, exist_ok=True)
             try:
-                plan = fn(spark, args.sf_dir)._sc is None  # noqa: unused
-            except Exception:
-                pass
-            try:
                 df = fn(spark, args.sf_dir)
                 txt = df._jdf.queryExecution().explainString(
                     spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(

@@ -50,6 +50,29 @@ def test_mset_matches_oracle(name, matcher, oracle):
     assert_mset_equal(got, want)
 
 
+REPEATED_POSITIONAL = {
+    "phrase_aba": Q.Phrase([Q.Term("return"), Q.Term("error"), Q.Term("return")]),
+    "phrase_aba_win": Q.Phrase(
+        [Q.Term("return"), Q.Term("error"), Q.Term("return")], window=6
+    ),
+    "near_aab": Q.Near([Q.Term("return"), Q.Term("return"), Q.Term("error")]),
+    "near_aab_win": Q.Near(
+        [Q.Term("return"), Q.Term("return"), Q.Term("error")], window=6
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(REPEATED_POSITIONAL))
+def test_repeated_term_positional_matches_oracle(name, matcher, oracle):
+    """A repeated term fills one window slot per occurrence and adds its
+    weight once per occurrence: [a, b, a] weighs w_a + w_b + w_a, like the
+    oracle's AND."""
+    q = REPEATED_POSITIONAL[name]
+    want = oracle.mset(q, 10)
+    assert want, "corpus must match the query for the check to bite"
+    assert_mset_equal(matcher.mset_df(q, 10).collect(), want)
+
+
 def test_match_counts(matcher, oracle):
     for name in ["single", "or2", "and", "andnot", "xor"]:
         q = QUERIES[name]

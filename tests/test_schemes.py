@@ -103,32 +103,40 @@ def test_synonym_no_plan_time_count_tf_free_schemes(spark, index, oracle):
         assert_mset_equal(got, want)
 
 
-def test_synonym_tf_counted_once_per_term_set(spark, index):
-    """tf-USING non-BM25 schemes (TfIdf) still need one exact merged-tf
-    count — but only ONE per term set per Matcher: repeat queries hit the
-    _syn_tf_cache."""
+def test_synonym_no_plan_time_count_tf_schemes(spark, index, oracle):
+    """Schemes whose init() reads termfreq get the exact merged termfreq
+    as an in-plan count too: Synonym queries run ZERO plan-time
+    DataFrame.count() jobs, and results match the oracle."""
     from pyspark.sql import DataFrame
 
     from xapian_spark.operators.matcher import Matcher
+    from xapian_spark.oracle import OracleMatcher
 
     q = Q.Synonym([Q.Term("binary_search"), Q.Term("merge_sort")])
-    m = Matcher(spark, index, scheme=TfIdfScheme())
-    first = m.mset_df(q, 10).collect()
-    assert tuple(t for t in ["binary_search", "merge_sort"]) in m._syn_tf_cache
-
+    tf_schemes = [
+        n
+        for n, mk in ALL_SCHEME_FACTORIES.items()
+        if mk is None or getattr(mk(), "uses_termfreq", True)
+    ]
+    assert {"bm25", "tfidf", "bm25plus", "inl2", "ifb2", "ineb2", "bb2"} <= set(
+        tf_schemes
+    )
     real_count = DataFrame.count
 
     def banned(self):
-        raise AssertionError("re-counted a cached synonym term set")
+        raise AssertionError("plan-time count() for a synonym")
 
-    DataFrame.count = banned
-    try:
-        again = m.mset_df(q, 10).collect()
-    finally:
-        DataFrame.count = real_count
-    assert [(r["doc_id"], r["weight"]) for r in again] == [
-        (r["doc_id"], r["weight"]) for r in first
-    ]
+    for name in tf_schemes:
+        make = ALL_SCHEME_FACTORIES[name]
+        scheme = make() if make else None
+        m = Matcher(spark, index, scheme=scheme)
+        om = OracleMatcher(oracle.ix, scheme=scheme) if scheme else oracle
+        DataFrame.count = banned
+        try:
+            got = m.mset_df(q, 10).collect()
+        finally:
+            DataFrame.count = real_count
+        assert_mset_equal(got, om.mset(q, 10))
 
 
 def test_trad_equals_bm25_mapping(spark, index, oracle):
@@ -236,8 +244,7 @@ def _no_collect_matcher(spark, index, scheme):
     def _boom(*a, **k):  # pragma: no cover - only fires on regression
         raise AssertionError("driver-side term collect on unlimited expansion")
 
-    m._expand_wildcard = _boom
-    m._expand_edit_distance = _boom
+    m._expand_term_set = _boom
     return m
 
 

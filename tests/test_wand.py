@@ -103,7 +103,7 @@ def test_impact_tiers_reject_sparse_docid_space(spark, corpus):
     assert ix.stats["doccount"] == corpus.count()
 
 
-def test_prune_auto_cost_switch(matcher):
+def test_prune_auto_cost_switch(matcher, monkeypatch):
     """prune='auto' (BENCH/BASELINE.md crossover): exhaustive below the
     posting-volume floor, pruned above it, rank-identical either way."""
     q = Q.Or([Q.Term("return"), Q.Term("if")])
@@ -114,18 +114,36 @@ def test_prune_auto_cost_switch(matcher):
     ]
     assert matcher.last_prune_decision == "exhaustive"
     # drop the floor below this corpus's posting volume -> pruned path
-    matcher.wand_auto_min_postings = 1
-    try:
-        pruned = [
-            (r["doc_id"], round(r["weight"], 9))
-            for r in matcher.mset_df(q, 10, prune="auto").collect()
-        ]
-        assert matcher.last_prune_decision == "pruned"
-    finally:
-        del matcher.wand_auto_min_postings
+    from xapian_spark.operators.matcher import Matcher
+
+    monkeypatch.setattr(Matcher, "WAND_AUTO_MIN_POSTINGS", 1)
+    pruned = [
+        (r["doc_id"], round(r["weight"], 9))
+        for r in matcher.mset_df(q, 10, prune="auto").collect()
+    ]
+    assert matcher.last_prune_decision == "pruned"
     assert [d for d, _ in exact] == [d for d, _ in pruned]
     for (_, we), (_, wp) in zip(exact, pruned):
         assert abs(we - wp) < 1e-9
     # prune=False never flips regardless of stats
     matcher.mset_df(q, 5, prune=False).collect()
     assert matcher.last_prune_decision == "exhaustive"
+
+
+def test_wand_writes_no_session_config(matcher, monkeypatch):
+    """The pruned path never writes session-global config, so a query on
+    another thread sharing the session always plans with the session's own
+    settings."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    def _no_write(self, key, value):
+        raise AssertionError(f"session config write {key}={value}")
+
+    q = Q.Or([Q.Term("return"), Q.Term("if"), Q.Term("binary_search")])
+    exact = [(r["doc_id"], r["weight"]) for r in matcher.mset_df(q, 5).collect()]
+    monkeypatch.setattr(RuntimeConfig, "set", _no_write)
+    pruned = [
+        (r["doc_id"], r["weight"])
+        for r in matcher.mset_df(q, 5, prune=True).collect()
+    ]
+    assert [d for d, _ in pruned] == [d for d, _ in exact]

@@ -33,12 +33,12 @@ def _c(v) -> Column:
     """``lit()`` for floats, pass-through for Columns.
 
     Every scheme's per-term state is a handful of scalars computed by
-    ``init()`` from (termfreq, collfreq, global stats).  The distributed
-    wildcard/fuzzy path (matcher._eval_term_set_distributed) initializes
-    the SAME TermWeight dataclasses via ``init_col()`` with termfreq /
-    collfreq as Columns — so those fields become Column expressions and the
-    ``sumpart_col`` formulas must lift them with ``_c`` instead of
-    ``F.lit``.  The scalar path is unchanged (lit of a float)."""
+    ``init()`` from (termfreq, collfreq, global stats).  The term-set
+    paths (matcher._eval_term_set_distributed, matcher._eval_synonym)
+    initialize the SAME TermWeight dataclasses via ``init_col()`` with
+    termfreq / collfreq as Columns — so those fields become Column
+    expressions and the ``sumpart_col`` formulas must lift them with ``_c``
+    instead of ``F.lit``.  The scalar path is unchanged (lit of a float)."""
     return v if isinstance(v, Column) else F.lit(v)
 
 
@@ -182,7 +182,7 @@ class BM25Scheme:
 
     def init_col(self, termfreq, collfreq, stats, wqf=1, factor=1.0, query_length=None):
         """``init`` with termfreq/collfreq as Columns (same op order as
-        bm25_init) — per-term state for the distributed wildcard path."""
+        bm25_init) — per-term state for the term-set paths."""
         p = self.params
         n = float(stats["doccount"])
         tf = termfreq.cast("double")

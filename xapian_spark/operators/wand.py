@@ -32,7 +32,6 @@ no binary columns read).
 from __future__ import annotations
 
 import math
-import threading
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -40,14 +39,6 @@ from pyspark.sql import functions as F
 from ..functions.weights import BM25Params, BM25Term
 from .indexer import TIER_SHIFT
 from .matcher import decode_blocks
-
-# SQLConf is session-global, so the phase-1 AQE toggle below is serialized
-# behind this lock: without it two threads sharing the SparkSession could
-# interleave set/restore and leave AQE off for unrelated queries (ADVICE
-# r04).  Queries OUTSIDE this module can still observe the brief AQE-off
-# window (a scheduling-latency nuance, never a correctness one); fully
-# per-query isolation would need the plan rebuilt on spark.newSession().
-_AQE_TOGGLE_LOCK = threading.Lock()
 
 
 def _bound_col(params: BM25Params, tw_col, lf_col, max_wdf, min_doclen):
@@ -183,19 +174,7 @@ def wand_topk(
             F.lit("tier").alias("kind"), "term", "tier", "supb", "minb", "cnt"
         )
     )
-    # Phase 1 is shuffle-light at ANY corpus scale (map-side partial aggs
-    # reduce to k + terms × tiers rows), so AQE's per-stage job
-    # materialization only adds scheduling latency here — run it
-    # pipelined.  The scoring phases below keep AQE (their shuffles grow
-    # with the corpus and want skew handling / coalescing).
-    conf = spark.conf
-    with _AQE_TOGGLE_LOCK:
-        aqe_was = conf.get("spark.sql.adaptive.enabled", "true")
-        try:
-            conf.set("spark.sql.adaptive.enabled", "false")
-            both = probe_part.unionByName(tier_part).collect()
-        finally:
-            conf.set("spark.sql.adaptive.enabled", aqe_was)
+    both = probe_part.unionByName(tier_part).collect()
     kth = sorted(
         (float(r["supb"]) for r in both if r["kind"] == "kth"), reverse=True
     )
@@ -458,12 +437,8 @@ def _score_decoded(blocks: DataFrame, with_consts, params: BM25Params) -> DataFr
 
     ``with_consts`` re-attaches the per-term constants as literal CASE
     columns (decode_blocks keeps only the core posting columns)."""
-    p = params
     dec = with_consts(decode_blocks(blocks))
-    normlen = F.greatest(F.col("doc_len").cast("double") * F.col("lf"), F.lit(p.min_normlen))
-    denom = F.lit(p.k1) * (normlen * F.lit(p.b) + F.lit(1 - p.b)) + F.col("wdf").cast("double")
+    w = BM25Term(F.col("tw"), F.col("lf"), params)
     return dec.select(
-        "doc_id",
-        "gmax",
-        (F.col("tw") * (F.col("wdf").cast("double") / denom)).alias("s"),
+        "doc_id", "gmax", w.sumpart_col(F.col("wdf"), F.col("doc_len")).alias("s")
     )
