@@ -1,10 +1,11 @@
-"""The int-key pack shuffle (r7 optimization) must be invisible in output:
-blocks built by shuffling xxhash64(term) keys and re-attaching term strings
-per block row are row-identical to the string-keyed path."""
-
-import os
+"""The int-key pack shuffle must be invisible in output: a build that has to
+re-salt after a key collision, and a build whose vocabulary is past the
+broadcast bound of the term re-attach join (so the join is a shuffle join),
+are row-, stats- and dictionary-identical to a default build of the same
+corpus."""
 
 import pytest
+from pyspark.sql import functions as F
 
 
 @pytest.fixture(scope="module")
@@ -14,38 +15,70 @@ def corpus(spark):
     return corpus_df(spark, 300, seed=7, n_partitions=4).persist()
 
 
-def _build(spark, corpus, **overrides):
+def _build(spark, corpus):
     from xapian_spark.operators.indexer import build_index
 
-    kw = dict(
+    return build_index(
+        spark,
+        corpus,
         content_col="content",
         meta_cols=["repo", "lang"],
         mode="simple",
         with_positions=True,
         impact_tiers=4,
     )
-    kw.update(overrides)
-    return build_index(spark, corpus, **kw)
 
 
-def test_hash_keyed_pack_matches_string_path(spark, corpus):
-    old = os.environ.get("SPARK_GRAFT_PACK_HASH_MAX_VOCAB")
-    try:
-        os.environ.pop("SPARK_GRAFT_PACK_HASH_MAX_VOCAB", None)
-        ix_hash = _build(spark, corpus)
-        # vocab cap 0 forces the string-keyed fallback (same switch the
-        # collision check would take)
-        os.environ["SPARK_GRAFT_PACK_HASH_MAX_VOCAB"] = "0"
-        ix_str = _build(spark, corpus)
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_PACK_HASH_MAX_VOCAB", None)
-        else:
-            os.environ["SPARK_GRAFT_PACK_HASH_MAX_VOCAB"] = old
-    rows_hash = sorted(tuple(r) for r in ix_hash.postings.collect())
-    rows_str = sorted(tuple(r) for r in ix_str.postings.collect())
-    assert rows_hash == rows_str
-    assert ix_hash.stats == ix_str.stats
-    assert sorted(map(tuple, ix_hash.dictionary.collect())) == sorted(
-        map(tuple, ix_str.dictionary.collect())
+def _snapshot(ix):
+    return (
+        sorted(tuple(r) for r in ix.postings.collect()),
+        ix.stats,
+        sorted(map(tuple, ix.dictionary.collect())),
     )
+
+
+@pytest.fixture(scope="module")
+def default_build(spark, corpus):
+    return _snapshot(_build(spark, corpus))
+
+
+def test_key_collision_resalts(spark, corpus, default_build, monkeypatch):
+    from xapian_spark.operators import indexer
+
+    real_key = indexer._term_key
+    salts = []
+
+    def colliding_key(salt):
+        # salt 0 maps every term to one key: the witness must see it
+        salts.append(salt)
+        return F.lit(0).cast("long") if salt == 0 else real_key(salt)
+
+    monkeypatch.setattr(indexer, "_term_key", colliding_key)
+    snap = _snapshot(_build(spark, corpus))
+    assert set(salts) == {0, 1}
+    assert snap == default_build
+
+
+def _postings_plan(ix):
+    return ix.postings._jdf.queryExecution().executedPlan().toString()
+
+
+def test_reattach_shuffle_joins_past_broadcast_bound(
+    spark, corpus, default_build, monkeypatch
+):
+    from xapian_spark.operators import indexer
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        # within the bound the term map is broadcast whatever the threshold
+        assert "SortMergeJoin" not in _postings_plan(_build(spark, corpus))
+        monkeypatch.setattr(indexer, "_REATTACH_BROADCAST_MAX_VOCAB", 0)
+        ix = _build(spark, corpus)
+        plan = _postings_plan(ix)
+        snap = _snapshot(ix)
+    finally:
+        spark.conf.set(key, old)
+    assert "SortMergeJoin" in plan
+    assert snap == default_build

@@ -24,8 +24,8 @@ Scale design (the part that must survive 10^12 docs):
   the salt — while a rare term collapses to a single group. Block contents
   are a pure function of (term, docid-range contents), so rebuilding any
   partition is deterministic and resumable (north rule).
-- The postings⋈dictionary join that attaches span(term) is skewed by
-  construction; AQE skew-join splitting handles it (enabled in session.py).
+- The join that attaches span(term) broadcasts only the hot-term head,
+  whose size is bounded regardless of corpus size (see build_index).
 """
 
 from __future__ import annotations
@@ -63,6 +63,10 @@ LAST_BUILD_TIMINGS: dict = {}
 MAX_SPAN = 1 << 22  # docid span cap per group → bounds executor group memory
 _SUBBLOCK_SHIFT = 32  # block_no = span_no << 32 | idx
 TIER_SHIFT = 60  # impact tier lives at span_no bit 28 → block_no bit 60
+# Largest vocabulary whose hash→term map build_index broadcasts to re-attach
+# term strings to packed blocks; past it the re-attach is a shuffle join,
+# which moves every packed block row a second time.
+_REATTACH_BROADCAST_MAX_VOCAB = 4_000_000
 
 # Positions travel PRE-ENCODED (delta+VByte per posting) from the inversion
 # pass: VByte streams concatenate losslessly, so the block-pack stage only
@@ -459,26 +463,35 @@ def _encode_poslist(poss: list[int]) -> bytes:
     return bytes(out)
 
 
-def _pack_partition(block_size: int, with_positions: bool, key_col: str = "term"):
-    """mapInPandas kernel: one hash partition of (term, span_no) groups →
-    block rows.
+def _term_key(salt: int):
+    """The pack shuffle's int64 stand-in for ``term``: ``xxhash64(term)`` at
+    salt 0, else ``xxhash64(salt, term)``.  The salt is hashed FIRST: Spark
+    seeds each column's hash with the previous column's, so
+    ``xxhash64(term, salt)`` would keep every collision of ``xxhash64(term)``
+    while ``xxhash64(salt, term)`` is a different hash function per salt."""
+    salted = [F.lit(salt)] if salt else []
+    return F.xxhash64(*salted, F.col("term"))
+
+
+def _pack_partition(block_size: int, with_positions: bool):
+    """mapInPandas kernel: one hash partition of (_thash, span_no) groups →
+    block rows keyed by ``_thash`` (the term's ``_term_key``).
 
     The partitioner guarantees group completeness per partition (explicit
-    ``repartition(n, "term", "span_no")`` upstream), so this replaces
+    ``repartition(n, "_thash", "span_no")`` upstream), so this replaces
     groupBy().applyInPandas() — whose ~1.5 ms per-group overhead is
     prohibitive at millions of (term, span) groups — with ONE partition-wide
     sort + vectorized group-boundary detection.  Output is a pure function
     of group contents (deterministic at any parallelism): rows sorted by
-    (term, span_no, doc_id), block boundaries at every ``block_size``-th
+    (_thash, span_no, doc_id), block boundaries at every ``block_size``-th
     posting within a group.
 
-    ``key_col='_thash'`` is the reduced-shuffle-bytes variant: the rows
-    carry an 8-byte ``xxhash64(term)`` instead of the term string (build
-    verifies injectivity over the vocabulary first), the sort keys become
-    pure int64 numpy sorts, and the term string is re-attached per BLOCK
-    row after packing — ~4096× fewer string attachments than shuffling one
-    per posting (guide §2.3 "shuffle keys and metadata instead of
-    payloads").
+    The rows carry an 8-byte key instead of the term string (build_index
+    picks a salt under which the key is injective over the vocabulary), so
+    the sort keys are pure int64 numpy sorts and the term string is
+    re-attached per BLOCK row after packing — up to block_size× fewer
+    string attachments than shuffling one per posting (guide §2.3 "shuffle keys
+    and metadata instead of payloads").
     """
 
     def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -489,10 +502,8 @@ def _pack_partition(block_size: int, with_positions: bool, key_col: str = "term"
         del parts
         if len(pdf) == 0:
             return
-        pdf = pdf.sort_values([key_col, "span_no", "doc_id"], kind="mergesort")
-        terms = pdf[key_col].to_numpy(
-            dtype=object if key_col == "term" else np.int64
-        )
+        pdf = pdf.sort_values(["_thash", "span_no", "doc_id"], kind="mergesort")
+        terms = pdf["_thash"].to_numpy(dtype=np.int64)
         span_nos = pdf["span_no"].to_numpy(dtype=np.int64)
         docids = pdf["doc_id"].to_numpy(dtype=np.uint64)
         wdfs = pdf["wdf"].to_numpy(dtype=np.uint64)
@@ -524,7 +535,7 @@ def _pack_partition(block_size: int, with_positions: bool, key_col: str = "term"
                     pos_blob = b"".join(positions[lo:hi])
                 rows.append(
                     {
-                        key_col: term,
+                        "_thash": term,
                         "block_no": (span_no << _SUBBLOCK_SHIFT) | idx,
                         "first_docid": int(d[0]),
                         "last_docid": int(d[-1]),
@@ -656,9 +667,9 @@ def build_index(
                 F.count("*").alias("vocab"),
                 F.sum("termfreq").alias("n_postings"),
                 # injectivity witness for the int-key pack shuffle: grouping
-                # by xxhash64(term) equals grouping by term iff no two vocab
-                # terms collide (checked below; falls back to string keys)
-                F.count_distinct(F.xxhash64(F.col("term"))).alias("n_thash"),
+                # by _term_key equals grouping by term iff no two vocab
+                # terms collide (checked below; a collision re-salts)
+                F.count_distinct(_term_key(0)).alias("n_thash"),
             )
         )
     )
@@ -677,14 +688,10 @@ def build_index(
     if write_path is not None:
         from concurrent.futures import ThreadPoolExecutor
 
+        from ..sources.catalog import retract_manifest, write_manifest
+
         os.makedirs(write_path, exist_ok=True)
-        # In-place rebuild atomicity (committer v2 writes land directly in
-        # the destination): retract the OLD manifest before any table is
-        # touched, so a crash mid-rewrite leaves an unreadable directory
-        # instead of a manifest pointing at mixed old/new part-files.
-        old_manifest = os.path.join(write_path, "MANIFEST.json")
-        if os.path.exists(old_manifest):
-            os.remove(old_manifest)
+        retract_manifest(write_path)
         pool = ThreadPoolExecutor(max_workers=2)
         side_futs["docs"] = pool.submit(
             docs.write.mode("overwrite").parquet, f"{write_path}/docs"
@@ -702,6 +709,13 @@ def build_index(
 
     try:
         st = stats_plan.collect()[0]
+        # A 64-bit collision inside the vocabulary would merge two terms'
+        # pack groups: re-salt until the key is injective (one-row job per
+        # retry over the persisted dictionary).
+        salt, n_keys = 0, st["n_thash"]
+        while n_keys != st["vocab"]:
+            salt += 1
+            n_keys = dictionary.agg(F.count_distinct(_term_key(salt))).first()[0]
     except BaseException:
         _abort_side_writes()
         raise
@@ -739,26 +753,11 @@ def build_index(
     # non-scaling serial tail of the write phase.
     # Int-key pack shuffle (guide §2.3): the pack repartition is the one
     # full-width shuffle of the build; replacing the per-posting term STRING
-    # with xxhash64(term) shrinks its rows and turns the pack kernel's sort
-    # into a pure int64 sort.  Sound only when the hash is injective over
-    # THIS vocabulary (n_thash == vocab, verified in the stats job — a
-    # collision would merge two terms' groups) and when the block-level
-    # hash→term re-attach map is broadcastable; otherwise fall back to the
-    # string path (identical output either way).
-    vocab = int(st["vocab"] or 0)
-    hash_keys = (
-        int(st["n_thash"] or 0) == vocab
-        and vocab
-        <= int(os.environ.get("SPARK_GRAFT_PACK_HASH_MAX_VOCAB", "4000000"))
-    )
-    key_col = "_thash" if hash_keys else "term"
-    dict_keyed = (
-        dictionary.select(F.xxhash64("term").alias("_thash"), "term", "termfreq")
-        if hash_keys
-        else dictionary
-    )
+    # with its int64 key shrinks its rows and turns the pack kernel's sort
+    # into a pure int64 sort.
+    dict_keyed = dictionary.select(_term_key(salt).alias("_thash"), "term", "termfreq")
     dict_spans = dict_keyed.select(
-        key_col,
+        "_thash",
         F.least(
             F.lit(MAX_SPAN),
             F.greatest(
@@ -798,14 +797,12 @@ def build_index(
                 F.col("wdf") >= F.lit(1 << (impact_tiers - 1 - t)), F.lit(t)
             ).otherwise(tier)
         span_no = (tier.cast("long") * F.lit(1 << 28)) + span_no
-    flat_keyed = (
-        flat.withColumn("_thash", F.xxhash64("term")) if hash_keys else flat
-    )
     grouped = (
-        flat_keyed.join(dict_spans, key_col, "left")
+        flat.withColumn("_thash", _term_key(salt))
+        .join(dict_spans, "_thash", "left")
         .withColumn("span", F.coalesce(F.col("span"), F.lit(MAX_SPAN)))
         .withColumn("span_no", span_no)
-        .select(key_col, "span_no", "doc_id", "wdf", "n_pos", "doc_len", "pos_enc")
+        .select("_thash", "span_no", "doc_id", "wdf", "n_pos", "doc_len", "pos_enc")
     )
     # Explicit hash repartition on the group key: the pack stage is
     # Python-CPU-bound, so partition count must track cores AND bound
@@ -813,34 +810,26 @@ def build_index(
     # shuffle to a handful of tasks and serialize the kernel).  The hash
     # partitioner guarantees each (term, span_no) group lands whole in one
     # partition, which is what lets _pack_partition group locally.
-    pack_factor = int(os.environ.get("SPARK_GRAFT_PACK_FACTOR", "2"))
     n_pack = max(
-        spark.sparkContext.defaultParallelism * pack_factor,
+        spark.sparkContext.defaultParallelism * 2,
         int(n_postings // 2_000_000) + 1,
     )
-    grouped = grouped.repartition(n_pack, key_col, "span_no")
-    if hash_keys:
-        hashed_schema = StructType(
-            [StructField("_thash", LongType())] + BLOCK_SCHEMA.fields[1:]
-        )
-        packed = grouped.mapInPandas(
-            _pack_partition(block_size, with_positions, key_col="_thash"),
-            hashed_schema,
-        )
-        # term strings re-attach once per BLOCK row (≈ n_postings/4096
-        # rows) via the broadcast hash→term map; the local sort restores
-        # the term-major row clustering the string path emits, so parquet
-        # row-group min/max pruning on term is unchanged.
-        tmap = F.broadcast(dict_keyed.select("_thash", "term"))
-        postings = (
-            packed.join(tmap, "_thash")
-            .select(*[f.name for f in BLOCK_SCHEMA.fields])
-            .sortWithinPartitions("term", "block_no")
-        )
-    else:
-        postings = grouped.mapInPandas(
-            _pack_partition(block_size, with_positions), BLOCK_SCHEMA
-        )
+    packed = grouped.repartition(n_pack, "_thash", "span_no").mapInPandas(
+        _pack_partition(block_size, with_positions),
+        StructType([StructField("_thash", LongType())] + BLOCK_SCHEMA.fields[1:]),
+    )
+    # Term strings re-attach once per BLOCK row (about one per term on a
+    # Zipf tail) from a broadcast map, up to _REATTACH_BROADCAST_MAX_VOCAB.
+    # The local sort gives term-major row clustering, so parquet row-group
+    # min/max stats prune on term.
+    tmap = dict_keyed.select("_thash", "term")
+    if int(st["vocab"]) <= _REATTACH_BROADCAST_MAX_VOCAB:
+        tmap = F.broadcast(tmap)
+    postings = (
+        packed.join(tmap, "_thash")
+        .select(*[f.name for f in BLOCK_SCHEMA.fields])
+        .sortWithinPartitions("term", "block_no")
+    )
 
     index = IndexTables(
         docs=docs,
@@ -872,8 +861,6 @@ def build_index(
             _abort_side_writes()
             raise
         pool.shutdown()
-        from ..sources.catalog import write_manifest
-
         write_manifest(write_path, index)
         LAST_BUILD_TIMINGS.clear()
         LAST_BUILD_TIMINGS.update(

@@ -15,8 +15,7 @@ def get_spark(
 ) -> SparkSession:
     """Build a SparkSession with the configs this engine relies on.
 
-    - AQE on (runtime coalescing + skew-join splitting — our postings⋈dictionary
-      join is skewed on hot terms by construction);
+    - AQE on (runtime shuffle-partition coalescing and skew-join splitting);
     - Arrow enabled (all tokenize/decode kernels are pandas UDFs);
     - shuffle partitions sized to the core count unless overridden (at real
       cluster scale this should be ~2-3× total cores; AQE coalesces down).

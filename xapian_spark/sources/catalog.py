@@ -8,8 +8,9 @@ flint lock + revisioned B-trees (backends/flint_lock.h).
 
 On a real cluster these writes become Iceberg table commits (snapshot id =
 manifest id); the layout here is deliberately Iceberg-shaped: postings are
-range-partitioned and sorted by (term, first_docid) so scans prune on term
-via parquet min/max — the analog of the postlist B-tree key seek.
+pack-partitioned and sorted by (term, block_no) within each file, so scans
+prune on term via parquet min/max — the analog of the postlist B-tree key
+seek.
 """
 
 from __future__ import annotations
@@ -27,29 +28,27 @@ from ..operators.indexer import IndexTables
 MANIFEST = "MANIFEST.json"
 
 
-def save_index(index: IndexTables, path: str, sort_postings: bool = False) -> dict:
+def retract_manifest(path: str) -> None:
+    """Remove ``path``'s manifest before its tables are overwritten.
+
+    In-place rewrite atomicity with committer v2 (direct-write task
+    commit): a crash mid-rewrite then leaves an unreadable directory rather
+    than a manifest pointing at mixed old/new part-files."""
+    old_manifest = os.path.join(path, MANIFEST)
+    if os.path.exists(old_manifest):
+        os.remove(old_manifest)
+
+
+def save_index(index: IndexTables, path: str) -> dict:
     """Write all tables + manifest; returns the manifest dict.
 
     The index builder's pack kernel already emits blocks sorted by
     (term, block_no) within each hash partition, so parquet row-group
     min/max stats prune on term without any extra shuffle — term-major
-    clustering ≈ the glass postlist key order, for free.  Pass
-    ``sort_postings=True`` to force an explicit re-cluster (only useful for
-    externally-supplied block DataFrames).
+    clustering ≈ the glass postlist key order, for free.
     """
     os.makedirs(path, exist_ok=True)
-    # In-place rewrite atomicity with committer v2 (direct-write task
-    # commit): retract any OLD manifest before tables are touched, so a
-    # crash mid-rewrite leaves an unreadable directory rather than a
-    # manifest pointing at mixed old/new part-files.
-    old_manifest = os.path.join(path, MANIFEST)
-    if os.path.exists(old_manifest):
-        os.remove(old_manifest)
-    postings = index.postings
-    if sort_postings:
-        postings = postings.repartition(
-            max(8, index.postings.sparkSession.sparkContext.defaultParallelism), "term"
-        ).sortWithinPartitions("term", "first_docid")
+    retract_manifest(path)
 
     # The three table writes are independent jobs; the docs/dictionary ones
     # read only their own persisted inputs (doclens + dictionary are cached
@@ -64,7 +63,7 @@ def save_index(index: IndexTables, path: str, sort_postings: bool = False) -> di
 
     with ThreadPoolExecutor(max_workers=3) as pool:
         futs = [
-            pool.submit(_write, postings, f"{path}/postings"),
+            pool.submit(_write, index.postings, f"{path}/postings"),
             pool.submit(_write, index.docs, f"{path}/docs"),
             pool.submit(_write, index.dictionary.sort("term"), f"{path}/dictionary"),
         ]
