@@ -8,6 +8,8 @@ soaktest (tests/soaktest/soaktest_queries.cc:180-240).
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 N_DOCS = 200
@@ -17,7 +19,11 @@ N_DOCS = 200
 def spark():
     from xapian_spark.session import get_spark
 
-    s = get_spark(master="local[8]", shuffle_partitions=8, app_name="xapian-spark-tests")
+    # one task slot per core: more slots than cores only add contention
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
+    s = get_spark(
+        master=f"local[{cpus}]", shuffle_partitions=8, app_name="xapian-spark-tests"
+    )
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

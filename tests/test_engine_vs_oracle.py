@@ -73,6 +73,35 @@ def test_repeated_term_positional_matches_oracle(name, matcher, oracle):
     assert_mset_equal(matcher.mset_df(q, 10).collect(), want)
 
 
+SET_TERMS = ["return", "posting_list", "error", "index"]
+
+
+@pytest.mark.parametrize("op", [Q.Or, Q.And, Q.Xor, Q.MaxOp], ids=lambda o: o.__name__)
+def test_term_children_share_one_decode(op, matcher):
+    """The distinct Term children of an OR/AND/XOR/MAX node are lowered onto
+    ONE decode_blocks call, not one decode per leaf."""
+    q = op([Q.Term(t) for t in SET_TERMS])
+    plan = matcher.matches(q)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("MapInPandas _decode(") == 1, plan
+
+
+def test_term_set_decode_sized_by_postings(matcher, index, monkeypatch):
+    """An OR of 4 terms over a few hundred postings decodes on one
+    partition; at one posting per task the decode keeps every partition of
+    the postings scan."""
+    from pyspark.sql import functions as F
+
+    from xapian_spark.operators import matcher as matcher_mod
+
+    children = [Q.Term(t) for t in SET_TERMS]
+    stats = matcher._term_stats(SET_TERMS)
+    scan = index.postings.filter(F.col("term").isin(SET_TERMS)).rdd.getNumPartitions()
+    assert scan > 1
+    assert matcher._union_children(children, 1.0, stats).rdd.getNumPartitions() == 1
+    monkeypatch.setattr(matcher_mod, "DECODE_POSTINGS_PER_TASK", 1)
+    assert matcher._union_children(children, 1.0, stats).rdd.getNumPartitions() == scan
+
+
 def test_match_counts(matcher, oracle):
     for name in ["single", "or2", "and", "andnot", "xor"]:
         q = QUERIES[name]

@@ -55,6 +55,14 @@ QUERIES = [
     Q.Or([Q.Term("binary_search"), Q.Term("return")]),
     Q.And([Q.Term("return"), Q.Term("if")]),
     Q.Synonym([Q.Term("binary_search"), Q.Term("merge_sort")]),
+    # term-set decode shapes: a duplicate sibling, a term missing from the
+    # dictionary, wqf > 1, ScaleWeight, a nested AND, a 300-term expansion
+    Q.Or([Q.Term("binary_search"), Q.Term("binary_search"), Q.Term("merge_sort")]),
+    Q.Or([Q.Term("binary_search"), Q.Term("zzz_not_there"), Q.Term("return")]),
+    Q.Or([Q.Term("binary_search", wqf=3), Q.Term("return")]),
+    Q.Or([Q.ScaleWeight(Q.Term("binary_search"), 2.5), Q.Term("merge_sort")]),
+    Q.Or([Q.Term("merge_sort"), Q.And([Q.Term("return"), Q.Term("if")])]),
+    Q.Wildcard("*", combiner="or", max_expansion=300, limit_policy="most_frequent"),
 ]
 
 

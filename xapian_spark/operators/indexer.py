@@ -752,9 +752,10 @@ def build_index(
     # full vocabulary, whose driver-side hash-table build was a measured
     # non-scaling serial tail of the write phase.
     # Int-key pack shuffle (guide §2.3): the pack repartition is the one
-    # full-width shuffle of the build; replacing the per-posting term STRING
-    # with its int64 key shrinks its rows and turns the pack kernel's sort
-    # into a pure int64 sort.
+    # full-width shuffle of the build; keying it by the term's int64 hash
+    # instead of its STRING turns the pack kernel's sort into a pure int64
+    # sort.  It does not always shrink the shuffle: random 64-bit keys do not
+    # LZ4-compress (4.69 M 9-character terms: 99.4 MB keyed vs 92.2 MB).
     dict_keyed = dictionary.select(_term_key(salt).alias("_thash"), "term", "termfreq")
     dict_spans = dict_keyed.select(
         "_thash",

@@ -28,7 +28,12 @@ are deterministic across partitionings and match the oracle bit-for-bit at
 float64.
 
 Scoring itself is pure Column expressions (no Python) over (wdf, doc_len)
-decoded from blocks by one Arrow-batched numpy kernel.
+decoded from blocks by one Arrow-batched numpy kernel.  Each term set is
+decoded once: the Term children of an OR/AND/XOR/MAX node (a lone Term is a
+one-term set) share one ``decode_blocks`` call, and every decode whose terms
+are known runs on partitions sized by its postings
+(``DECODE_POSTINGS_PER_TASK``), so a query over a few thousand postings
+starts one Python task, not one per postings scan partition.
 """
 
 from __future__ import annotations
@@ -66,14 +71,39 @@ DECODED_SCHEMA = StructType(
 )
 
 
-def decode_blocks(blocks: DataFrame, with_positions: bool = False) -> DataFrame:
+#: Postings one decode task takes on before a term set's decode gets a
+#: second partition: a decode of P known postings runs on
+#: ``P // DECODE_POSTINGS_PER_TASK + 1`` partitions (never more than its
+#: scan has).  It is about the number of postings a task decodes in the
+#: time its own start-up costs, so no task is started for less work than
+#: it adds.  Measured on a 4-vCPU host (PySpark 4.1.2, Python 3.11,
+#: local[4]), on a 320k-doc index: each extra decode task costs ~0.2 core-s
+#: beyond its work (a 310k-posting term on its scan's 4 partitions 2.25
+#: core-s, on one 1.62), and one task decodes ~0.4-0.5 M postings/s (the
+#: same term in 0.78 s wall).  Most of a warm worker task's fixed cost is
+#: ``setup_spark_files`` → ``importlib.invalidate_caches()``, which
+#: re-reads the directory of ``pyspark.zip`` for every zipimporter in the
+#: worker (0.14 s per call with 14 of them).
+DECODE_POSTINGS_PER_TASK = 100_000
+
+
+def decode_blocks(
+    blocks: DataFrame, with_positions: bool = False, postings: int | None = None
+) -> DataFrame:
     """Posting blocks → (term, doc_id, wdf, doc_len[, positions]) rows.
 
     One numpy kernel per Arrow batch; inverse of indexer._pack_blocks.
+    ``postings``: how many postings ``blocks`` holds at most, when the
+    caller knows it from dictionary stats — the decode then runs on
+    ``postings // DECODE_POSTINGS_PER_TASK + 1`` partitions.  Full-table
+    decodes leave it None and keep the scan's partitioning.
     """
     cols = ["term", "n", "docids", "wdfs", "doclens"]
     if with_positions:
         cols += ["pos_counts", "positions"]
+    blocks = blocks.select(*cols)
+    if postings is not None:
+        blocks = blocks.coalesce(postings // DECODE_POSTINGS_PER_TASK + 1)
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -112,7 +142,7 @@ def decode_blocks(blocks: DataFrame, with_positions: bool = False) -> DataFrame:
                     }
                 )
 
-    return blocks.select(*cols).mapInPandas(_decode, DECODED_SCHEMA)
+    return blocks.mapInPandas(_decode, DECODED_SCHEMA)
 
 
 def reconstruct_text(
@@ -780,10 +810,13 @@ class Matcher:
         self, terms: list[str], with_positions: bool = False
     ) -> DataFrame:
         """Filter blocks to query terms (parquet min/max pruning on the
-        sorted term column ≈ postlist B-tree seek) and decode."""
+        sorted term column ≈ postlist B-tree seek) and decode, on as many
+        partitions as the terms' Σ termfreq needs (memoized dictionary
+        stats — no extra job)."""
         uniq = sorted(set(terms))
         blocks = self.index.postings.filter(F.col("term").isin(uniq))
-        return decode_blocks(blocks, with_positions=with_positions)
+        postings = sum(ts[0] for ts in self._term_stats(uniq).values())
+        return decode_blocks(blocks, with_positions=with_positions, postings=postings)
 
     def _apply_sumextra(self, matched: DataFrame, q: Q.Query) -> DataFrame:
         """Add the scheme's document-dependent extra weight once per matched
@@ -830,19 +863,30 @@ class Matcher:
     def _uniq_col(self):
         return F.col("uniq_terms") if self._needs_uniq() else None
 
-    def _scored_leaf(
-        self, term: str, wqf: int, factor: float, stats: dict
+    def _scored_terms(
+        self, leaves: list[tuple[Q.Term, float, int]], stats: dict
     ) -> DataFrame:
-        """One term leaf → (doc_id, weight). Pure Column-expression scoring."""
-        w = self._weight_for(term, wqf, factor, stats)
-        if w is None:
-            return self._empty()
-        dec = self._with_uniqterms(self._decoded_for_terms([term]))
-        return dec.select(
-            "doc_id",
-            w.sumpart_col(
-                F.col("wdf"), F.col("doc_len"), self._uniq_col()
-            ).alias("weight"),
+        """Term leaves (term, factor, ord) → DF(doc_id, ord, weight), one row
+        per (posting, leaf), from ONE decode of their distinct known terms.
+        Each row's (ord, weight) pairs come from a CASE on ``term`` whose
+        branches are the leaves' literal-constant ``sumpart_col``
+        expressions, so every weight equals a per-leaf decode's
+        bit-for-bit; a term under several leaves yields one pair each."""
+        pairs: dict[str, list[Column]] = {}
+        for leaf, factor, o in leaves:
+            w = self._weight_for(leaf.term, leaf.wqf, factor, stats)
+            if w is not None:
+                part = w.sumpart_col(F.col("wdf"), F.col("doc_len"), self._uniq_col())
+                pairs.setdefault(leaf.term, []).append(_pair(F.lit(o), part))
+        if not pairs:
+            return self._empty().withColumn("ord", F.lit(0))
+        by_term = None
+        for t, ps in pairs.items():
+            hit, arr = F.col("term") == t, F.array(*ps)
+            by_term = F.when(hit, arr) if by_term is None else by_term.when(hit, arr)
+        dec = self._with_uniqterms(self._decoded_for_terms(list(pairs)))
+        return dec.select("doc_id", F.explode(by_term).alias("p")).select(
+            "doc_id", F.col("p.o").alias("ord"), F.col("p.w").alias("weight")
         )
 
     def _empty(self) -> DataFrame:
@@ -863,10 +907,22 @@ class Matcher:
     def _union_children(
         self, children: list[Q.Query], factor: float, stats: dict
     ) -> DataFrame:
+        """DF(doc_id, weight, ord): one row per (doc, matching child), the
+        child's position in ``ord``.  Term children (also under
+        ScaleWeight) share one decode; every other child is its own plan."""
+        leaves: list[tuple[Q.Term, float, int]] = []
         parts = []
         for c in children:
+            leaf, f = c, factor
+            while isinstance(leaf, Q.ScaleWeight):
+                leaf, f = leaf.subquery, f * leaf.factor
+            if isinstance(leaf, Q.Term):
+                leaves.append((leaf, f, self._next_ord()))
+                continue
             cd = self._eval_inner(c, factor, stats)
             parts.append(cd.withColumn("ord", F.lit(self._next_ord())))
+        if leaves:
+            parts.insert(0, self._scored_terms(leaves, stats))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -887,7 +943,9 @@ class Matcher:
 
     def _eval_inner(self, q: Q.Query, factor: float, stats: dict) -> DataFrame:
         if isinstance(q, Q.Term):
-            return self._scored_leaf(q.term, q.wqf, factor, stats)
+            return self._scored_terms([(q, factor, 0)], stats).select(
+                "doc_id", "weight"
+            )
 
         if isinstance(q, Q.MatchAll):
             return self.index.docs.select("doc_id", F.lit(0.0).alias("weight"))

@@ -118,6 +118,9 @@ def wand_topk(
         )
 
     total_gmax = float(sum(v[2] for v in consts_v.values()))
+    # every decode below reads a subset of these terms' postings, so their
+    # Σ termfreq sizes its partitions (decode_blocks ``postings``)
+    postings_n = sum(term_stats[t][0] for t in terms)
 
     meta = (
         with_consts(
@@ -146,7 +149,7 @@ def wand_topk(
         .select("term", "block_no")
     )
     probe_blocks = postings.join(F.broadcast(probe_keys), ["term", "block_no"], "left_semi")
-    probe_scores = _score_decoded(probe_blocks, with_consts, params)
+    probe_scores = _score_decoded(probe_blocks, with_consts, params, postings_n)
     probe_part = (
         probe_scores.groupBy("doc_id")
         .agg(F.sum("s").alias("p"))
@@ -266,12 +269,12 @@ def wand_topk(
         # per-posting scores ARE per-doc totals: skip the groupBy shuffle
         # (and the persist — phase 3 never re-reads single-term partials),
         # making the scoring phase decode → TakeOrderedAndProject only
-        partials = _score_decoded(surv_blocks, with_consts, params).select(
+        partials = _score_decoded(surv_blocks, with_consts, params, postings_n).select(
             "doc_id", F.col("s").alias("partial")
         )
     else:
         partials = (
-            _score_decoded(surv_blocks, with_consts, params)
+            _score_decoded(surv_blocks, with_consts, params, postings_n)
             .groupBy("doc_id")
             .agg(
                 F.sum("s").alias("partial"),
@@ -334,7 +337,7 @@ def wand_topk(
             "left_semi",
         )
         extra = (
-            _score_decoded(extra_blocks, with_consts, params)
+            _score_decoded(extra_blocks, with_consts, params, postings_n)
             .join(F.broadcast(cand_ids_df), "doc_id", "left_semi")
             .groupBy("doc_id")
             .agg(F.sum("s").alias("extra"))
@@ -432,12 +435,15 @@ def _tier_cutoffs(
     return out
 
 
-def _score_decoded(blocks: DataFrame, with_consts, params: BM25Params) -> DataFrame:
+def _score_decoded(
+    blocks: DataFrame, with_consts, params: BM25Params, postings: int
+) -> DataFrame:
     """Decode blocks → per-posting BM25 sumpart Column (bm25weight.cc:166-178).
 
     ``with_consts`` re-attaches the per-term constants as literal CASE
-    columns (decode_blocks keeps only the core posting columns)."""
-    dec = with_consts(decode_blocks(blocks))
+    columns (decode_blocks keeps only the core posting columns);
+    ``postings`` bounds the blocks' postings and sizes the decode."""
+    dec = with_consts(decode_blocks(blocks, postings=postings))
     w = BM25Term(F.col("tw"), F.col("lf"), params)
     return dec.select(
         "doc_id", "gmax", w.sumpart_col(F.col("wdf"), F.col("doc_len")).alias("s")
