@@ -33,7 +33,8 @@ decoded once: the Term children of an OR/AND/XOR/MAX node (a lone Term is a
 one-term set) share one ``decode_blocks`` call, and every decode whose terms
 are known runs on partitions sized by its postings
 (``DECODE_POSTINGS_PER_TASK``), so a query over a few thousand postings
-starts one Python task, not one per postings scan partition.
+starts one Python task, not one per postings scan partition: each extra
+task costs ~0.2 core-s, most of it on the JVM side.
 """
 
 from __future__ import annotations
@@ -77,13 +78,17 @@ DECODED_SCHEMA = StructType(
 #: scan has).  It is about the number of postings a task decodes in the
 #: time its own start-up costs, so no task is started for less work than
 #: it adds.  Measured on a 4-vCPU host (PySpark 4.1.2, Python 3.11,
-#: local[4]), on a 320k-doc index: each extra decode task costs ~0.2 core-s
-#: beyond its work (a 310k-posting term on its scan's 4 partitions 2.25
-#: core-s, on one 1.62), and one task decodes ~0.4-0.5 M postings/s (the
-#: same term in 0.78 s wall).  Most of a warm worker task's fixed cost is
-#: ``setup_spark_files`` → ``importlib.invalidate_caches()``, which
-#: re-reads the directory of ``pyspark.zip`` for every zipimporter in the
-#: worker (0.14 s per call with 14 of them).
+#: local[4]), on a 320k-doc index, with workers forked from
+#: ``xapian_spark.pydaemon``: decoding one term of 117k-310k postings on
+#: all its scan partitions instead of one costs 0.15-0.38 core-s more per
+#: extra task (0.35-0.83 with the stock daemon), and only 0.03-0.13
+#: core-s of that is Python worker time (0.17-0.40 with the stock daemon,
+#: which re-read ``pyspark.zip`` in ``importlib.invalidate_caches()``
+#: before every task); the rest is the JVM side of a scan-and-Arrow task.
+#: One task decodes ~0.4-0.5 M postings/s.  An interleaved A/B of 50 000
+#: against 100 000 (9 runs per query) moved core-s by -5% to +9% on the
+#: queries whose partition count changed and by -6% on the 310k-posting
+#: term, whose plan did not: no support for a different value.
 DECODE_POSTINGS_PER_TASK = 100_000
 
 

@@ -6,6 +6,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory that holds the ``xapian_spark`` package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+
 
 def get_spark(
     master: str | None = None,
@@ -18,7 +22,13 @@ def get_spark(
     - AQE on (runtime shuffle-partition coalescing and skew-join splitting);
     - Arrow enabled (all tokenize/decode kernels are pandas UDFs);
     - shuffle partitions sized to the core count unless overridden (at real
-      cluster scale this should be ~2-3× total cores; AQE coalesces down).
+      cluster scale this should be ~2-3× total cores; AQE coalesces down);
+    - Python workers forked from ``xapian_spark.pydaemon``, which stops each
+      task re-reading every unchanged zip archive on the worker's path
+      (~0.2 core-s per task, see that module).  Workers must therefore
+      import ``xapian_spark``, as every engine kernel already requires: the
+      package root is appended to the workers' PYTHONPATH, after any
+      ``spark.executorEnv.PYTHONPATH`` the caller passes.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -27,8 +37,7 @@ def get_spark(
     # (BENCH_r04.json: FileNotFoundException /tmp/blockmgr-…/shuffle_140…).
     # On a real cluster this maps to the executors' provisioned local disks.
     local_dir = os.environ.get(
-        "SPARK_GRAFT_LOCAL_DIR",
-        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".spark-local"),
+        "SPARK_GRAFT_LOCAL_DIR", os.path.join(_PACKAGE_ROOT, ".spark-local")
     )
     os.makedirs(local_dir, exist_ok=True)
     if shuffle_partitions is None:
@@ -62,7 +71,11 @@ def get_spark(
         # over direct-write object stores.
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .config("spark.python.daemon.module", "xapian_spark.pydaemon")
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    worker_path = [extra_conf.pop(_WORKER_PYTHONPATH, ""), _PACKAGE_ROOT]
+    b = b.config(_WORKER_PYTHONPATH, os.pathsep.join(p for p in worker_path if p))
+    for k, v in extra_conf.items():
         b = b.config(k, v)
     return b.getOrCreate()
