@@ -1,4 +1,4 @@
-"""Segments / incremental freshness / compaction + multimodal plumbing."""
+"""Segments / incremental freshness / compaction / streaming dedup."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -83,128 +83,6 @@ def test_streaming_foreachbatch(spark, corpus, tmp_path):
     assert segs
     ix = MultiIndex(spark, root).load()
     assert ix.stats["doccount"] == corpus.count()
-
-
-def test_multimodal_pipeline(spark):
-    from xapian_spark.operators.multimodal import (
-        extract_features,
-        fake_decoder,
-        frame_sample_plan,
-        real_decoder,
-        synthetic_media_df,
-    )
-
-    media = synthetic_media_df(spark, 30)
-    feats = extract_features(media, decoder=fake_decoder)
-    rows = feats.collect()
-    assert len(rows) == 30
-    assert all(len(r["feature"]) == 16 for r in rows)
-    # deterministic across runs
-    again = {r["media_id"]: r["feature"] for r in extract_features(media).collect()}
-    for r in rows:
-        assert again[r["media_id"]] == r["feature"]
-    # frame sampling plan never reads the payload column (column pruning —
-    # assert on the parquet ReadSchema, where pruning actually happens)
-    import tempfile
-
-    d = tempfile.mkdtemp()
-    media.write.mode("overwrite").parquet(d)
-    media_pq = spark.read.parquet(d)
-    plan = frame_sample_plan(media_pq, every_ms=1000)
-    explained = plan._jdf.queryExecution().executedPlan().toString()
-    read_schema = [l for l in explained.splitlines() if "ReadSchema" in l]
-    assert read_schema and all("payload" not in l for l in read_schema)
-    n_video = media_pq.filter("kind = 'video'").count()
-    assert plan.select("media_id").distinct().count() == n_video
-    # the real decoder rejects unrecognized containers loudly
-    with pytest.raises(ValueError):
-        real_decoder(b"x", "image", "image/png")
-
-
-def _png_bytes(w, h, bit_depth=8, color_type=6):
-    import struct
-    import zlib
-
-    ihdr = struct.pack(">IIBBBBB", w, h, bit_depth, color_type, 0, 0, 0)
-    chunk = b"IHDR" + ihdr
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + struct.pack(">I", len(ihdr))
-        + chunk
-        + struct.pack(">I", zlib.crc32(chunk) & 0xFFFFFFFF)
-    )
-
-
-def _jpeg_bytes(w, h, channels=3):
-    import struct
-
-    # SOI + APP0 (JFIF) + SOF0; enough for any header parser
-    app0 = b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-    sof = struct.pack(">BHHB", 8, h, w, channels) + b"\x01\x11\x00" * channels
-    return (
-        b"\xff\xd8"
-        + b"\xff\xe0" + struct.pack(">H", len(app0) + 2) + app0
-        + b"\xff\xc0" + struct.pack(">H", len(sof) + 2) + sof
-    )
-
-
-def _gif_bytes(w, h):
-    import struct
-
-    return b"GIF89a" + struct.pack("<HH", w, h) + bytes([0x91, 0, 0])
-
-
-def _wav_bytes(channels=2, rate=44100, bits=16):
-    import struct
-
-    fmt = struct.pack("<HHIIHH", 1, channels, rate, rate * channels * bits // 8,
-                      channels * bits // 8, bits)
-    return (
-        b"RIFF" + struct.pack("<I", 36) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", 0)
-    )
-
-
-def test_multimodal_real_decoder(spark):
-    """real_decoder parses actual PNG/JPEG/GIF/WAV byte layouts (stdlib
-    header decode) — dimensions/params recovered exactly, end-to-end
-    through the Arrow extract_features kernel."""
-    from xapian_spark.operators.multimodal import (
-        extract_features,
-        media_header,
-        real_decoder,
-    )
-
-    assert media_header(_png_bytes(640, 480)) == {
-        "format": "png", "width": 640, "height": 480, "depth": 8, "channels": 4,
-    }
-    assert media_header(_jpeg_bytes(1024, 768)) == {
-        "format": "jpeg", "width": 1024, "height": 768, "depth": 8, "channels": 3,
-    }
-    g = media_header(_gif_bytes(33, 44))
-    assert (g["format"], g["width"], g["height"]) == ("gif", 33, 44)
-    assert media_header(_wav_bytes()) == {
-        "format": "wav", "channels": 2, "sample_rate": 44100, "bits": 16,
-    }
-    # end-to-end through the Spark kernel with the REAL decoder
-    rows = [
-        (1, "image", "image/png", _png_bytes(640, 480)),
-        (2, "image", "image/jpeg", _jpeg_bytes(1024, 768)),
-        (3, "image", "image/gif", _gif_bytes(33, 44)),
-        (4, "audio", "audio/wav", _wav_bytes()),
-    ]
-    media = spark.createDataFrame(
-        rows, "media_id long, kind string, mime string, payload binary"
-    )
-    feats = {
-        r["media_id"]: r["feature"]
-        for r in extract_features(media, decoder=real_decoder).collect()
-    }
-    assert feats[1][1:3] == [640.0, 480.0]
-    assert feats[2][1:3] == [1024.0, 768.0]
-    assert feats[3][1:3] == [33.0, 44.0]
-    assert feats[4][5] == 44100.0
 
 
 def test_streaming_stateful_first_seen(spark, tmp_path):
@@ -356,34 +234,3 @@ def test_streaming_stateful_first_seen_bloom(spark, tmp_path):
     q.awaitTermination(120)
     got = {r["doc_id"] for r in spark.sql("SELECT * FROM first_seen_bloom_t").collect()}
     assert got == {1, 2, 4}
-
-
-def test_jpeg_header_fill_bytes_and_sos():
-    """Spec-conformant JPEG quirks (ADVICE r06): 0xFF fill bytes before a
-    marker are padding, not a marker byte; a stream reaching SOS before any
-    SOFn bails out cleanly instead of walking into entropy-coded data."""
-    import struct
-
-    import pytest
-
-    from xapian_spark.operators.multimodal import media_header
-
-    app0 = b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-    sof = struct.pack(">BHHB", 8, 480, 640, 3) + b"\x01\x11\x00" * 3
-    # fill bytes (extra 0xFF) before both the APP0 and SOF0 markers
-    padded = (
-        b"\xff\xd8"
-        + b"\xff\xff\xff\xe0" + struct.pack(">H", len(app0) + 2) + app0
-        + b"\xff\xff\xc0" + struct.pack(">H", len(sof) + 2) + sof
-    )
-    assert media_header(padded) == {
-        "format": "jpeg", "width": 640, "height": 480, "depth": 8, "channels": 3,
-    }
-    # SOS before any SOFn: clean ValueError, not a misparse of scan bytes
-    sos_first = (
-        b"\xff\xd8"
-        + b"\xff\xda" + struct.pack(">H", 8) + b"\x01\x01\x00\x3f\x00\x00"
-        + b"\x12\x34" * 16
-    )
-    with pytest.raises(ValueError):
-        media_header(sos_first)

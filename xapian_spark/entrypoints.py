@@ -23,9 +23,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.weights import BM25Params
-from .operators.indexer import IndexTables, build_index
+from .operators.indexer import build_index
 from .operators.matcher import Matcher
 from .plans import query as Q
+from .session import context_cache
 
 K1, B = 1.0, 0.5  # BM25 defaults (weight.h:1128-1142); k2=0, k3=1, wqf=1
 ROUND = 6
@@ -44,12 +45,11 @@ def _round_half_up(x: float, digits: int = ROUND) -> float:
         )
     )
 
-_CACHE: dict[str, tuple[IndexTables, Matcher]] = {}
-
 
 def get_matcher(spark: SparkSession, sf_dir: str) -> Matcher:
-    key = sf_dir
-    if key not in _CACHE:
+    cache = context_cache(spark)
+    key = ("matcher", sf_dir)
+    if key not in cache:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         # Deterministic per-doc date value slot (the documents table carries
         # none): 2020-01-01 + (doc_id mod 1000) days.  Mirrored verbatim in
@@ -84,27 +84,26 @@ def get_matcher(spark: SparkSession, sf_dir: str) -> Matcher:
         ix.docs = ix.docs.coalesce(4).persist()
         ix.dictionary = ix.dictionary.coalesce(1).persist()
         ix.postings.count()  # warm the caches once
-        _CACHE[key] = (ix, Matcher(spark, ix))
-    return _CACHE[key][1]
+        cache[key] = Matcher(spark, ix)
+    return cache[key]
 
 
 def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
-_SHINGLE_CACHE: dict[str, DataFrame] = {}
-
-
 def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-token shingles, computed once per sf_dir and persisted — shared by
     the dedup/simhash entries (each would otherwise re-shingle the corpus)."""
-    if sf_dir not in _SHINGLE_CACHE:
+    cache = context_cache(spark)
+    key = ("shingles", sf_dir)
+    if key not in cache:
         from .operators.dedup import shingles
 
         sh = shingles(_documents(spark, sf_dir), w=3).persist()
         sh.count()
-        _SHINGLE_CACHE[sf_dir] = sh
-    return _SHINGLE_CACHE[sf_dir]
+        cache[key] = sh
+    return cache[key]
 
 
 def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -350,10 +349,12 @@ def _q_wand_topk(query: Q.Query, k: int, prune=True):
         # rows_out: the WAND kernel already collected the top-n to the
         # driver; read them from there instead of a createDataFrame→collect
         # round trip on the returned local relation (~0.3 s of fixed job
-        # overhead saved per query)
+        # overhead saved per query).  It stays empty when the exhaustive
+        # plan ran, so ``df`` is collected then (an empty pruned top-k
+        # collects an empty local relation: same rows).
         raw: list = []
         df = m.mset_df(query, n, prune=prune, rows_out=raw)
-        rows = raw if m.last_prune_decision == "pruned" else [
+        rows = raw or [
             (int(r["doc_id"]), float(r["weight"])) for r in df.collect()
         ]
         # HALF_UP like F.round / the SQL oracle — builtin round() is
@@ -1160,19 +1161,18 @@ ORDER BY cos DESC, a ASC, b ASC LIMIT 15"""
 )
 
 
-_ANN_CACHE: dict[object, object] = {}  # sf_dir → LSH ix; ("ivf", sf_dir) → IVF ix
-
-
 def _ann_index(spark: SparkSession, sf_dir: str):
     """Materialized LSH bucket table, built once per sf_dir (index-time
     signature computation; queries only probe buckets + re-rank)."""
-    if sf_dir not in _ANN_CACHE:
+    cache = context_cache(spark)
+    key = ("ann_lsh", sf_dir)
+    if key not in cache:
         from .operators.similarity import AnnLshIndex
 
         emb = _embeddings(spark, sf_dir)
         dim = len(emb.select("embedding").first()["embedding"])
-        _ANN_CACHE[sf_dir] = AnnLshIndex(emb, dim)
-    return _ANN_CACHE[sf_dir]
+        cache[key] = AnnLshIndex(emb, dim)
+    return cache[key]
 
 
 def _q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1234,15 +1234,17 @@ def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     members.  The data-adaptive counterpart of ann_lsh_topk's
     signature buckets — both are the bounded-candidate scale paths over
     the brute-force baseline."""
-    if ("ivf", sf_dir) not in _ANN_CACHE:
+    cache = context_cache(spark)
+    key = ("ann_ivf", sf_dir)
+    if key not in cache:
         from .operators.similarity import AnnIvfIndex
 
-        _ANN_CACHE[("ivf", sf_dir)] = AnnIvfIndex(
+        cache[key] = AnnIvfIndex(
             _embeddings(spark, sf_dir),
             n_cells=_IVF_CELLS,
             iters=_IVF_ITERS,
         )
-    return _ANN_CACHE[("ivf", sf_dir)].query(
+    return cache[key].query(
         _qvec(spark, sf_dir), k=10, nprobe=_IVF_NPROBE
     )
 

@@ -262,18 +262,6 @@ def tokenize_series(texts: pd.Series, mode: str = "xapian") -> pd.Series:
     return pd.Series(out, index=texts.index)
 
 
-def make_tokenizer_udf(mode: str = "xapian"):
-    """Arrow-vectorized pandas UDF: content:string → array<string> terms."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, StringType
-
-    @pandas_udf(ArrayType(StringType()))
-    def _tok(texts: pd.Series) -> pd.Series:
-        return tokenize_series(texts, mode=mode)
-
-    return _tok
-
-
 # ---------------------------------------------------------------------------
 # CJK / unbroken-script n-gram segmentation (FLAG_NGRAMS).
 # Reference: queryparser/word-breaker.cc (is_unbroken_script table +
@@ -362,10 +350,9 @@ def wordbreak_tokenize_mixed(
     ICU is not available in this environment, so segmentation is greedy
     longest-match ("maximum matching") against an injectable ``lexicon``
     of words — the same dictionary-driven scheme ICU's CJK BreakIterator
-    uses, with the dictionary as the injection point (the multimodal
-    decoder-hook pattern).  Codepoints starting no lexicon word fall back
-    to single-character words, so segmentation is total and deterministic
-    for any lexicon including the empty one.
+    uses, with the dictionary as the injection point.  Codepoints starting
+    no lexicon word fall back to single-character words, so segmentation
+    is total and deterministic for any lexicon including the empty one.
     """
     out: list[str] = []
     max_len = max((len(w) for w in lexicon), default=1)

@@ -22,6 +22,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import context_cache
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -279,20 +281,6 @@ class AnnLshIndex:
         self._base.unpersist()
 
 
-_PAIRS_BCAST_CACHE: dict = {}
-
-
-def clear_pairs_broadcast_cache() -> None:
-    """Destroy and drop cosine_pairs_topk's cached matrix broadcasts —
-    call after replacing the embeddings a cached plan reads."""
-    while _PAIRS_BCAST_CACHE:
-        _, old = _PAIRS_BCAST_CACHE.popitem()
-        try:
-            old.destroy()
-        except Exception:
-            pass
-
-
 def cosine_pairs_topk(
     emb: DataFrame,
     k: int = 15,
@@ -333,19 +321,12 @@ def cosine_pairs_topk(
     spark = emb.sparkSession
     # Re-collecting + re-broadcasting the matrix on every call both wastes
     # the warm path and accumulates dead broadcasts on the driver.  Cache
-    # by the input plan's semantic hash (segments/parquet inputs are
-    # immutable by the engine's conventions; clear_pairs_broadcast_cache()
-    # resets).  Evicted entries are destroyed.
-    try:
-        key = (id(spark.sparkContext), emb.semanticHash(), id_col, vec_col)
-    except Exception:
-        key = None
-    b_all = _PAIRS_BCAST_CACHE.get(key) if key is not None else None
-    if b_all is not None:
-        # true LRU: move the re-hit key to the end so eviction below
-        # (oldest-first) never removes the entry just used (ADVICE r05:
-        # dict.popitem() is LIFO and evicted the NEWEST entry)
-        _PAIRS_BCAST_CACHE[key] = _PAIRS_BCAST_CACHE.pop(key)
+    # by the input plan's semantic hash in the SparkContext's cache
+    # (segments/parquet inputs are immutable by the engine's conventions),
+    # at most 4 matrices, least recently used evicted first.
+    cache = context_cache(spark)
+    key = ("cosine_pairs_topk", emb.semanticHash(), id_col, vec_col)
+    b_all = cache.pop(key, None)
     if b_all is None:
         n_rows = emb.count()
         if n_rows > max_rows:
@@ -360,17 +341,13 @@ def cosine_pairs_topk(
         mat = np.array([list(r[vec_col]) for r in rows], dtype=np.float64)
         norms = np.sqrt((mat * mat).sum(axis=1))
         b_all = spark.sparkContext.broadcast((ids, mat, norms))
-        if key is not None:
-            while len(_PAIRS_BCAST_CACHE) >= 4:
-                oldest = next(iter(_PAIRS_BCAST_CACHE))
-                old = _PAIRS_BCAST_CACHE.pop(oldest)
-                try:
-                    # unpersist (not destroy): a lazily-held plan may still
-                    # reference it; Spark re-ships from the driver if so
-                    old.unpersist()
-                except Exception:
-                    pass
-            _PAIRS_BCAST_CACHE[key] = b_all
+        cached = [c for c in cache if c[0] == "cosine_pairs_topk"]
+        while len(cached) > 3:
+            # unpersist (not destroy): a lazily-held plan may still
+            # reference it; Spark re-ships from the driver if so
+            cache.pop(cached.pop(0)).unpersist()
+    # (re-)inserted last, so the list above runs oldest first
+    cache[key] = b_all
     pad, margin = 4, 1e-9
 
     def gen(batches):

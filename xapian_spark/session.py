@@ -3,12 +3,32 @@
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
 # the directory that holds the ``xapian_spark`` package
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+# applicationId → that SparkContext's memoized state (at most one entry)
+_per_context: dict[str, dict] = {}
+_per_context_lock = threading.Lock()
+
+
+def context_cache(spark: SparkSession) -> dict:
+    """The dict of state memoized for ``spark``'s live SparkContext.
+
+    Keyed by the context's ``applicationId``.  A process has at most one
+    active SparkContext, so when a new id shows up (``spark.stop()`` then a
+    new session) every entry of the old one is dropped: its DataFrames,
+    persisted blocks and broadcasts died with that context.
+    """
+    app_id = spark.sparkContext.applicationId
+    with _per_context_lock:
+        if app_id not in _per_context:
+            _per_context.clear()
+            _per_context[app_id] = {}
+        return _per_context[app_id]
 
 
 def get_spark(
