@@ -37,3 +37,59 @@ def test_compression_ratio_dense():
     # dense docids → ~1 byte/posting after delta
     arr = np.arange(1, 100001, dtype=np.uint64)
     assert len(codec.encode_docids(arr)) <= 100000 + 4
+
+
+@st.composite
+def _segments(draw):
+    """Segment lists as the indexer codes them: strictly increasing docid
+    (or position) segments, count segments up to 2**63 - 1, and empty
+    segments (a boolean term's posting has no positions)."""
+    docid_segs = draw(
+        st.lists(
+            st.lists(st.integers(0, 2**63 - 1), unique=True, max_size=40).map(sorted),
+            max_size=30,
+        )
+    )
+    count_segs = draw(
+        st.lists(st.lists(st.integers(0, 2**63 - 1), max_size=40), max_size=30)
+    )
+    return docid_segs, count_segs
+
+
+def _flat(segs):
+    counts = np.array([len(s) for s in segs], dtype=np.int64)
+    return np.array([v for s in segs for v in s], dtype=np.uint64), counts
+
+
+@given(_segments())
+@settings(max_examples=200, deadline=None)
+def test_segments_match_single_block_codec(segments):
+    """Each segment's bytes, sliced out at the returned offsets, are the
+    one-block codec's bytes; decoding the joined bytes gives the values."""
+    for segs, delta, one_block in (
+        (segments[0], True, codec.encode_docids),
+        (segments[1], False, codec.encode_counts),
+    ):
+        flat, counts = _flat(segs)
+        buf, offsets = codec.encode_segments(flat, counts, delta=delta)
+        assert len(offsets) == len(segs) + 1 and offsets[-1] == len(buf)
+        for i, s in enumerate(segs):
+            assert buf[offsets[i]:offsets[i + 1]] == one_block(
+                np.array(s, dtype=np.uint64)
+            )
+        assert np.array_equal(codec.decode_segments(buf, counts, delta=delta), flat)
+
+
+def test_codec_segmented_roundtrip():
+    import random
+
+    rng = random.Random(0)
+    for _ in range(200):
+        lists = [
+            sorted(rng.sample(range(1, 1000), rng.randint(0, 10)))
+            for _ in range(rng.randint(0, 20))
+        ]
+        flat, counts = _flat(lists)
+        buf, offsets = codec.encode_segments(flat, counts, delta=True)
+        dec = np.split(codec.decode_segments(buf, counts, delta=True), np.cumsum(counts))
+        assert [list(x) for x in dec[:-1]] == lists

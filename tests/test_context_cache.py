@@ -13,6 +13,8 @@ import os
 import subprocess
 import sys
 import textwrap
+import threading
+import time
 from concurrent.futures import ThreadPoolExecutor
 from types import SimpleNamespace
 
@@ -150,6 +152,33 @@ def test_context_cache_follows_the_live_context(monkeypatch):
     second = session.context_cache(spark_of("app-2"))
     assert second == {} and session._per_context == {"app-2": second}
 
+
+
+def test_memoized_builds_once_under_concurrency(monkeypatch):
+    """Four threads asking for one cold key run its build once and all get
+    the object it built."""
+    from xapian_spark import session
+
+    monkeypatch.setattr(session, "_per_context", {})
+    monkeypatch.setattr(session, "_build_locks", {})
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app-1"))
+    barrier = threading.Barrier(4)
+    built = []
+
+    def build():
+        built.append(threading.get_ident())
+        time.sleep(0.2)  # a real build takes seconds: let the others arrive
+        return object()
+
+    def ask(_):
+        barrier.wait()
+        return session.memoized(spark, ("entry", "sf"), build)
+
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        got = list(pool.map(ask, range(4)))
+    assert len(built) == 1
+    assert all(g is got[0] for g in got)
+    assert session.context_cache(spark)[("entry", "sf")] is got[0]
 
 def test_pairs_broadcast_cache_keeps_four_matrices(spark, monkeypatch):
     """``cosine_pairs_topk`` re-uses a cached matrix broadcast (no collect)

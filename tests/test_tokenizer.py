@@ -73,24 +73,6 @@ def test_fast_path_equals_state_machine():
         assert T(s) == _xapian_tokenize_slow(s), repr(s)
 
 
-def test_codec_segmented_roundtrip():
-    import random
-
-    import numpy as np
-
-    from xapian_spark.functions import codec
-
-    rng = random.Random(0)
-    for _ in range(200):
-        lists = [
-            sorted(rng.sample(range(1, 1000), rng.randint(0, 10)))
-            for _ in range(rng.randint(0, 20))
-        ]
-        counts = np.array([len(x) for x in lists], dtype=np.int64)
-        dec = codec.decode_segmented(codec.encode_segmented(lists, counts), counts)
-        assert [list(x) for x in dec] == lists
-
-
 def test_ngram_tokenize_mixed():
     from xapian_spark.functions.tokenizer import ngram_tokenize_mixed
 

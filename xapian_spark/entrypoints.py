@@ -26,7 +26,7 @@ from .functions.weights import BM25Params
 from .operators.indexer import build_index
 from .operators.matcher import Matcher
 from .plans import query as Q
-from .session import context_cache
+from .session import memoized
 
 K1, B = 1.0, 0.5  # BM25 defaults (weight.h:1128-1142); k2=0, k3=1, wqf=1
 ROUND = 6
@@ -47,9 +47,7 @@ def _round_half_up(x: float, digits: int = ROUND) -> float:
 
 
 def get_matcher(spark: SparkSession, sf_dir: str) -> Matcher:
-    cache = context_cache(spark)
-    key = ("matcher", sf_dir)
-    if key not in cache:
+    def build() -> Matcher:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         # Deterministic per-doc date value slot (the documents table carries
         # none): 2020-01-01 + (doc_id mod 1000) days.  Mirrored verbatim in
@@ -84,8 +82,9 @@ def get_matcher(spark: SparkSession, sf_dir: str) -> Matcher:
         ix.docs = ix.docs.coalesce(4).persist()
         ix.dictionary = ix.dictionary.coalesce(1).persist()
         ix.postings.count()  # warm the caches once
-        cache[key] = Matcher(spark, ix)
-    return cache[key]
+        return Matcher(spark, ix)
+
+    return memoized(spark, ("matcher", sf_dir), build)
 
 
 def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -95,15 +94,14 @@ def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-token shingles, computed once per sf_dir and persisted — shared by
     the dedup/simhash entries (each would otherwise re-shingle the corpus)."""
-    cache = context_cache(spark)
-    key = ("shingles", sf_dir)
-    if key not in cache:
-        from .operators.dedup import shingles
+    from .operators.dedup import shingles
 
+    def build() -> DataFrame:
         sh = shingles(_documents(spark, sf_dir), w=3).persist()
         sh.count()
-        cache[key] = sh
-    return cache[key]
+        return sh
+
+    return memoized(spark, ("shingles", sf_dir), build)
 
 
 def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1164,15 +1162,13 @@ ORDER BY cos DESC, a ASC, b ASC LIMIT 15"""
 def _ann_index(spark: SparkSession, sf_dir: str):
     """Materialized LSH bucket table, built once per sf_dir (index-time
     signature computation; queries only probe buckets + re-rank)."""
-    cache = context_cache(spark)
-    key = ("ann_lsh", sf_dir)
-    if key not in cache:
-        from .operators.similarity import AnnLshIndex
+    from .operators.similarity import AnnLshIndex
 
+    def build() -> AnnLshIndex:
         emb = _embeddings(spark, sf_dir)
-        dim = len(emb.select("embedding").first()["embedding"])
-        cache[key] = AnnLshIndex(emb, dim)
-    return cache[key]
+        return AnnLshIndex(emb, len(emb.select("embedding").first()["embedding"]))
+
+    return memoized(spark, ("ann_lsh", sf_dir), build)
 
 
 def _q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1234,19 +1230,16 @@ def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     members.  The data-adaptive counterpart of ann_lsh_topk's
     signature buckets — both are the bounded-candidate scale paths over
     the brute-force baseline."""
-    cache = context_cache(spark)
-    key = ("ann_ivf", sf_dir)
-    if key not in cache:
-        from .operators.similarity import AnnIvfIndex
+    from .operators.similarity import AnnIvfIndex
 
-        cache[key] = AnnIvfIndex(
-            _embeddings(spark, sf_dir),
-            n_cells=_IVF_CELLS,
-            iters=_IVF_ITERS,
-        )
-    return cache[key].query(
-        _qvec(spark, sf_dir), k=10, nprobe=_IVF_NPROBE
+    ivf = memoized(
+        spark,
+        ("ann_ivf", sf_dir),
+        lambda: AnnIvfIndex(
+            _embeddings(spark, sf_dir), n_cells=_IVF_CELLS, iters=_IVF_ITERS
+        ),
     )
+    return ivf.query(_qvec(spark, sf_dir), k=10, nprobe=_IVF_NPROBE)
 
 
 def _ivf_sql() -> str:

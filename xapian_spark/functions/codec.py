@@ -14,8 +14,12 @@ Spark's analog is a `postings` table keyed by (term, block_no) with
 first_docid / last_docid / max_wdf columns for block skipping (the
 block-max WAND metadata, cf. xapian-core/weight/bm25weight.cc:180-202).
 
-Encode/decode are pure numpy (no per-row Python loops over postings), so the
-hot path inside pandas UDFs stays vectorized.
+One segmented primitive pair does all the coding: :func:`encode_segments`
+codes many segments (a partition's blocks, a batch's position lists) in one
+numpy pass and returns each one's byte offset; :func:`decode_segments`
+decodes the joined bytes of many segments in one pass (VByte is
+self-delimiting).  ``encode_docids``/``encode_counts`` and their inverses
+wrap it for a single block.
 """
 
 from __future__ import annotations
@@ -25,11 +29,37 @@ import numpy as np
 __all__ = [
     "vbyte_encode",
     "vbyte_decode",
+    "encode_segments",
+    "decode_segments",
     "encode_docids",
     "decode_docids",
     "encode_counts",
     "decode_counts",
 ]
+
+
+def _vbyte(v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """VByte bytes (uint8) of a uint64 array, and each value's byte count."""
+    if v.size == 0 or int(v.max()) < 0x80:
+        # Fast path: every value fits one byte.
+        return v.astype(np.uint8), np.ones(v.shape, dtype=np.int64)
+    # Number of 7-bit groups needed per value (at least 1), computed with a
+    # vectorized shift loop (≤10 iterations for 64-bit values).
+    tmp = v >> np.uint64(7)
+    ngroups = np.ones(v.shape, dtype=np.int64)
+    while tmp.any():
+        ngroups += tmp > 0
+        tmp >>= np.uint64(7)
+    out = np.empty(int(ngroups.sum()), dtype=np.uint8)
+    # Output offset of each value's first byte.
+    offs = np.cumsum(ngroups) - ngroups
+    # Write groups position-by-position (max 10 iterations for 64-bit).
+    for k in range(int(ngroups.max())):
+        alive = ngroups > k
+        group = ((v[alive] >> np.uint64(7 * k)) & np.uint64(0x7F)).astype(np.uint8)
+        group[ngroups[alive] > k + 1] |= 0x80
+        out[offs[alive] + k] = group
+    return out, ngroups
 
 
 def vbyte_encode(values: np.ndarray) -> bytes:
@@ -38,147 +68,100 @@ def vbyte_encode(values: np.ndarray) -> bytes:
     Matches pack_uint semantics: least-significant 7-bit group first,
     continuation bit (0x80) set on all but the final byte of each value.
     """
-    v = np.ascontiguousarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
-    if v.size and int(v.max()) < 0x80:
-        # Fast path: every value fits one byte.
-        return v.astype(np.uint8).tobytes()
-    # Number of 7-bit groups needed per value (at least 1), computed with a
-    # vectorized shift loop (≤10 iterations for 64-bit values).
-    tmp = v >> np.uint64(7)
-    ngroups = np.ones(v.shape, dtype=np.int64)
-    while tmp.any():
-        ngroups += (tmp > 0).astype(np.int64)
-        tmp >>= np.uint64(7)
-    total = int(ngroups.sum())
-    out = np.empty(total, dtype=np.uint8)
-    # Output offsets for each value's first byte.
-    offs = np.zeros(v.shape, dtype=np.int64)
-    if v.size > 1:
-        np.cumsum(ngroups[:-1], out=offs[1:])
-    # Write groups position-by-position (max 10 iterations for 64-bit).
-    remaining = v.copy()
-    idx = offs.copy()
-    alive = np.ones(v.shape, dtype=bool)
-    while alive.any():
-        cur = remaining[alive]
-        bytes_here = (cur & np.uint64(0x7F)).astype(np.uint8)
-        more = cur >= np.uint64(0x80)
-        bytes_here[more] |= 0x80
-        out[idx[alive]] = bytes_here
-        remaining[alive] >>= np.uint64(7)
-        idx[alive] += 1
-        still = np.zeros(v.shape, dtype=bool)
-        still[alive] = more
-        alive = still
-    return out.tobytes()
+    return _vbyte(np.ascontiguousarray(values, dtype=np.uint64))[0].tobytes()
 
 
 def vbyte_decode(data: bytes, count: int) -> np.ndarray:
     """Decode ``count`` VByte values from ``data`` into uint64 array."""
-    if count == 0:
-        return np.empty(0, dtype=np.uint64)
     raw = np.frombuffer(data, dtype=np.uint8)
-    if raw.size == count and not (raw & 0x80).any():
-        # Fast path: all single-byte.
-        return raw.astype(np.uint64)
-    is_cont = (raw & 0x80) != 0
-    # Each value ends at a byte with the continuation bit clear.
-    ends = np.flatnonzero(~is_cont)
-    if ends.size != count:
-        raise ValueError(f"vbyte stream has {ends.size} values, expected {count}")
-    starts = np.empty(count, dtype=np.int64)
-    starts[0] = 0
-    starts[1:] = ends[:-1] + 1
-    lengths = ends - starts + 1
-    maxlen = int(lengths.max())
-    vals = np.zeros(count, dtype=np.uint64)
-    payload = (raw & 0x7F).astype(np.uint64)
-    for k in range(maxlen):
-        has = lengths > k
-        vals[has] |= payload[starts[has] + k] << np.uint64(7 * k)
+    # Each value ends at a byte with the continuation bit clear; that byte
+    # holds its most significant 7-bit group.
+    last = raw < 0x80
+    vals = raw[last].astype(np.uint64)
+    if vals.size != count:
+        raise ValueError(f"vbyte stream has {vals.size} values, expected {count}")
+    cont = np.flatnonzero(~last)
+    if cont.size:
+        # Reassemble only the multi-byte values, so a long stream with a few
+        # of them costs about what an all-single-byte one does.  The value a
+        # continuation byte belongs to is the number of last bytes before it.
+        owner = cont - np.arange(cont.size)
+        first = np.flatnonzero(np.diff(owner, prepend=-1))
+        start = cont[first]
+        nbytes = np.diff(np.append(first, cont.size)) + 1
+        v = np.zeros(first.size, dtype=np.uint64)
+        for k in range(int(nbytes.max())):
+            has = nbytes > k
+            v[has] |= (raw[start[has] + k] & 0x7F).astype(np.uint64) << np.uint64(7 * k)
+        vals[owner[first]] = v
     return vals
 
 
-def encode_docids(docids: np.ndarray) -> bytes:
-    """Delta + VByte encode a strictly-increasing docid array.
+def _segment_starts(counts: np.ndarray) -> np.ndarray:
+    """Index of the first value of every non-empty segment."""
+    return (np.cumsum(counts) - counts)[counts > 0]
 
-    First value is stored as-is; subsequent values as (docid[i]-docid[i-1]-1),
-    mirroring the increment coding of glass postlist chunks
-    (glass_postlist.cc:686-695 stores differences).
+
+def encode_segments(
+    values: np.ndarray, counts: np.ndarray, delta: bool
+) -> tuple[bytes, np.ndarray]:
+    """VByte-encode ``values`` as ``len(counts)`` consecutive segments.
+
+    Segment *i* is the next ``counts[i]`` values.  With ``delta`` each
+    segment must be strictly increasing; its first value is stored as-is
+    and later ones as ``diff - 1``, the increment coding of glass postlist
+    chunks (glass_postlist.cc:686-695).  Returns the bytes of all segments
+    and their ``len(counts) + 1`` byte offsets: segment *i* is
+    ``buf[offsets[i]:offsets[i + 1]]``, and is byte-identical to encoding
+    that segment alone.
     """
-    d = np.ascontiguousarray(docids, dtype=np.uint64)
-    if d.size == 0:
-        return b""
-    deltas = np.empty_like(d)
-    deltas[0] = d[0]
-    if d.size > 1:
-        deltas[1:] = d[1:] - d[:-1] - np.uint64(1)
-    return vbyte_encode(deltas)
+    v = np.ascontiguousarray(values, dtype=np.uint64)
+    counts = np.asarray(counts, dtype=np.int64)
+    if delta and v.size:
+        # uint64 differences wrap at segment starts; those are overwritten
+        d = np.empty_like(v)
+        d[0] = v[0]
+        d[1:] = v[1:] - v[:-1] - np.uint64(1)
+        starts = _segment_starts(counts)
+        d[starts] = v[starts]
+        v = d
+    out, ngroups = _vbyte(v)
+    value_offsets = np.concatenate(([0], np.cumsum(ngroups)))
+    return out.tobytes(), value_offsets[np.concatenate(([0], np.cumsum(counts)))]
+
+
+def decode_segments(data: bytes, counts: np.ndarray, delta: bool) -> np.ndarray:
+    """Inverse of :func:`encode_segments` over the joined bytes of its
+    segments → one flat uint64 array of ``sum(counts)`` values."""
+    counts = np.asarray(counts, dtype=np.int64)
+    vals = vbyte_decode(data, int(counts.sum()))
+    if not delta or vals.size == 0:
+        return vals
+    # Undo ``diff - 1`` with one running sum over all segments: each
+    # segment's first step also takes back the previous segment's last
+    # value, so every segment restarts from zero (uint64 arithmetic wraps,
+    # so the result is exact).
+    starts = _segment_starts(counts)
+    steps = vals + np.uint64(1)
+    steps[starts] = vals[starts]
+    steps[starts[1:]] -= np.add.reduceat(steps, starts)[:-1]
+    return np.cumsum(steps, dtype=np.uint64)
+
+
+def encode_docids(docids: np.ndarray) -> bytes:
+    """Delta + VByte encode one strictly-increasing docid block."""
+    return encode_segments(docids, [len(docids)], delta=True)[0]
 
 
 def decode_docids(data: bytes, count: int) -> np.ndarray:
     """Inverse of :func:`encode_docids` → uint64 docid array."""
-    deltas = vbyte_decode(data, count)
-    if deltas.size == 0:
-        return deltas
-    deltas[1:] += np.uint64(1)
-    return np.cumsum(deltas, dtype=np.uint64)
+    return decode_segments(data, [count], delta=True)
 
 
 def encode_counts(counts: np.ndarray) -> bytes:
     """VByte encode wdf/count values (no delta — not monotone)."""
-    return vbyte_encode(np.ascontiguousarray(counts, dtype=np.uint64))
+    return vbyte_encode(counts)
 
 
 def decode_counts(data: bytes, count: int) -> np.ndarray:
     return vbyte_decode(data, count)
-
-
-def encode_segmented(lists, counts: np.ndarray) -> bytes:
-    """Delta+VByte a sequence of strictly-increasing int lists (position
-    lists of one block's postings) as ONE stream, fully vectorized:
-    each segment's first value absolute, later values as (diff - 1).
-    """
-    total = int(counts.sum())
-    if total == 0:
-        return b""
-    flat = np.concatenate(
-        [np.asarray(p, dtype=np.int64) for p in lists if p is not None and len(p)]
-    )
-    d = np.empty_like(flat)
-    d[0] = flat[0]
-    if len(flat) > 1:
-        d[1:] = flat[1:] - flat[:-1] - 1
-    nz = counts > 0
-    seg_starts = np.concatenate(([0], np.cumsum(counts[nz])[:-1]))
-    d[seg_starts] = flat[seg_starts]
-    return vbyte_encode(d.astype(np.uint64))
-
-
-def decode_segmented(data: bytes, counts: np.ndarray) -> list[np.ndarray]:
-    """Inverse of :func:`encode_segmented` → list of int32 arrays (empty
-    segments come back as empty arrays)."""
-    counts = np.asarray(counts, dtype=np.int64)
-    total = int(counts.sum())
-    if total == 0:
-        return [np.empty(0, dtype=np.int32) for _ in counts]
-    flat_d = vbyte_decode(data, total).astype(np.int64)
-    nz = counts > 0
-    seg_starts = np.concatenate(([0], np.cumsum(counts[nz])[:-1]))
-    x = flat_d + 1
-    x[seg_starts] = flat_d[seg_starts]
-    cs = np.cumsum(x)
-    base = cs[seg_starts] - flat_d[seg_starts]  # cumulative before segment
-    corr = np.repeat(base, counts[nz])
-    pos = (cs - corr).astype(np.int32)
-    parts = np.split(pos, np.cumsum(counts[nz])[:-1])
-    if nz.all():
-        return parts
-    out: list[np.ndarray] = []
-    it = iter(parts)
-    empty = np.empty(0, dtype=np.int32)
-    for c in counts:
-        out.append(next(it) if c > 0 else empty)
-    return out

@@ -274,8 +274,6 @@ def invert_corpus(
         *[F.col(c).cast("string").alias(f"_bf_{c}") for c in bool_fields],
     )
 
-    enc = _encode_poslist if with_positions else None
-
     if ngrams and word_breaks is not None:
         raise ValueError("ngrams and word_breaks are mutually exclusive")
     if word_breaks is not None:
@@ -377,7 +375,8 @@ def invert_corpus(
             out_wdf: list[int] = []
             out_npos: list[int] = []
             out_len: list[int] = []
-            out_pos: list[bytes | None] = []
+            # the batch's positions, one n_pos-long segment per posting
+            flat_pos: list[int] = []
             ids = pdf["doc_id"].to_numpy()
             texts = pdf["_content"].to_numpy(dtype=object)
             langs = (
@@ -405,7 +404,8 @@ def invert_corpus(
                     out_wdf.append(wdf)
                     out_npos.append(len(poss))
                     out_len.append(dlen)
-                    out_pos.append(enc(poss) if enc else None)
+                    if with_positions:
+                        flat_pos.extend(poss)
                 # boolean field terms: wdf 0, positionless, doc_len untouched
                 for c, prefix in bool_fields.items():
                     v = bf_vals[c][r]
@@ -419,7 +419,12 @@ def invert_corpus(
                     out_wdf.append(0)
                     out_npos.append(0)
                     out_len.append(dlen)
-                    out_pos.append(enc([]) if enc else None)
+            if with_positions:
+                pos_enc = _segment_bytes(
+                    *codec.encode_segments(flat_pos, out_npos, delta=True)
+                )
+            else:
+                pos_enc = [None] * len(out_doc)
             yield pd.DataFrame(
                 {
                     "doc_id": pd.Series(out_doc, dtype="int64"),
@@ -427,7 +432,7 @@ def invert_corpus(
                     "wdf": pd.Series(out_wdf, dtype="int32"),
                     "n_pos": pd.Series(out_npos, dtype="int32"),
                     "doc_len": pd.Series(out_len, dtype="int32"),
-                    "pos_enc": pd.Series(out_pos, dtype=object),
+                    "pos_enc": pd.Series(pos_enc, dtype=object),
                 }
             )
 
@@ -444,23 +449,11 @@ def _should_stem(term: str) -> bool:
     return unicodedata.category(term[0]) in ("Ll", "Lt", "Lm", "Lo")
 
 
-def _encode_poslist(poss: list[int]) -> bytes:
-    """Delta+VByte one ascending position list (pure Python — lists are tiny
-    and this runs in the map-side inversion where it parallelizes freely).
-    Identical byte layout to codec.encode_segmented's per-segment coding:
-    first value absolute, then (diff - 1)."""
-    out = bytearray()
-    prev = -1
-    first = True
-    for p in poss:
-        v = p if first else p - prev - 1
-        first = False
-        prev = p
-        while v >= 0x80:
-            out.append(0x80 | (v & 0x7F))
-            v >>= 7
-        out.append(v)
-    return bytes(out)
+def _segment_bytes(buf: bytes, offsets: np.ndarray) -> list[bytes]:
+    """Cut ``buf`` at ``offsets`` (``k + 1`` byte offsets, as
+    ``codec.encode_segments`` returns them) into its ``k`` segments."""
+    o = offsets.tolist()
+    return [buf[lo:hi] for lo, hi in zip(o[:-1], o[1:])]
 
 
 def _term_key(salt: int):
@@ -486,6 +479,14 @@ def _pack_partition(block_size: int, with_positions: bool):
     (_thash, span_no, doc_id), block boundaries at every ``block_size``-th
     posting within a group.
 
+    Blocks are cut with numpy over the whole partition: their metadata is
+    indexed or ``reduceat``-ed at the block starts, and each coded column is
+    ONE ``codec.encode_segments`` call with a segment per block.  The only
+    per-block Python left is slicing those buffers into the column's values
+    and joining each block's ``pos_enc`` bytes (VByte streams concatenate
+    losslessly; one join per block beat one join per partition plus a
+    ``len`` per posting on 1.6 M-posting partitions).
+
     The rows carry an 8-byte key instead of the term string (build_index
     picks a salt under which the key is injective over the vocabulary), so
     the sort keys are pure int64 numpy sorts and the term string is
@@ -505,11 +506,9 @@ def _pack_partition(block_size: int, with_positions: bool):
         pdf = pdf.sort_values(["_thash", "span_no", "doc_id"], kind="mergesort")
         terms = pdf["_thash"].to_numpy(dtype=np.int64)
         span_nos = pdf["span_no"].to_numpy(dtype=np.int64)
-        docids = pdf["doc_id"].to_numpy(dtype=np.uint64)
-        wdfs = pdf["wdf"].to_numpy(dtype=np.uint64)
-        nposs = pdf["n_pos"].to_numpy(dtype=np.uint64)
-        dlens = pdf["doc_len"].to_numpy(dtype=np.uint64)
-        positions = pdf["pos_enc"].to_numpy(dtype=object) if with_positions else None
+        docids = pdf["doc_id"].to_numpy(dtype=np.int64)
+        wdfs = pdf["wdf"].to_numpy(dtype=np.int64)
+        dlens = pdf["doc_len"].to_numpy(dtype=np.int64)
         n = len(pdf)
         # group boundaries: term change OR span change
         change = np.empty(n, dtype=bool)
@@ -517,39 +516,39 @@ def _pack_partition(block_size: int, with_positions: bool):
         if n > 1:
             change[1:] = (terms[1:] != terms[:-1]) | (span_nos[1:] != span_nos[:-1])
         starts = np.flatnonzero(change)
-        ends = np.append(starts[1:], n)
-        rows = []
-        for s, e in zip(starts, ends):
-            term = terms[s]
-            span_no = int(span_nos[s])
-            for idx, lo in enumerate(range(s, e, block_size)):
-                hi = min(lo + block_size, e)
-                d = docids[lo:hi]
-                w = wdfs[lo:hi]
-                dl = dlens[lo:hi]
-                pos_counts_blob = None
-                pos_blob = None
-                if with_positions:
-                    # VByte streams concatenate losslessly → just join bytes.
-                    pos_counts_blob = codec.vbyte_encode(nposs[lo:hi])
-                    pos_blob = b"".join(positions[lo:hi])
-                rows.append(
-                    {
-                        "_thash": term,
-                        "block_no": (span_no << _SUBBLOCK_SHIFT) | idx,
-                        "first_docid": int(d[0]),
-                        "last_docid": int(d[-1]),
-                        "n": hi - lo,
-                        "max_wdf": int(w.max()),
-                        "min_doclen": int(dl.min()),
-                        "docids": codec.encode_docids(d),
-                        "wdfs": codec.encode_counts(w),
-                        "doclens": codec.encode_counts(dl),
-                        "pos_counts": pos_counts_blob,
-                        "positions": pos_blob,
-                    }
-                )
-        yield pd.DataFrame(rows)
+        # a block starts at every block_size-th posting of a group
+        in_group = np.arange(n) - np.repeat(starts, np.diff(np.append(starts, n)))
+        bstarts = np.flatnonzero(in_group % block_size == 0)
+        bn = np.diff(np.append(bstarts, n))
+
+        def coded(values: np.ndarray, delta: bool) -> list[bytes]:
+            return _segment_bytes(*codec.encode_segments(values, bn, delta))
+
+        pos_counts_col = positions_col = None
+        if with_positions:
+            pos_counts_col = coded(pdf["n_pos"].to_numpy(dtype=np.int64), False)
+            pos_enc = pdf["pos_enc"].tolist()
+            bounds = np.append(bstarts, n).tolist()
+            positions_col = [
+                b"".join(pos_enc[lo:hi]) for lo, hi in zip(bounds[:-1], bounds[1:])
+            ]
+        yield pd.DataFrame(
+            {
+                "_thash": terms[bstarts],
+                "block_no": (span_nos[bstarts] << _SUBBLOCK_SHIFT)
+                | (in_group[bstarts] // block_size),
+                "first_docid": docids[bstarts],
+                "last_docid": docids[bstarts + bn - 1],
+                "n": bn,
+                "max_wdf": np.maximum.reduceat(wdfs, bstarts),
+                "min_doclen": np.minimum.reduceat(dlens, bstarts),
+                "docids": coded(docids, True),
+                "wdfs": coded(wdfs, False),
+                "doclens": coded(dlens, False),
+                "pos_counts": pos_counts_col,
+                "positions": positions_col,
+            }
+        )
 
     return pack
 
@@ -805,10 +804,11 @@ def build_index(
         .withColumn("span_no", span_no)
         .select("_thash", "span_no", "doc_id", "wdf", "n_pos", "doc_len", "pos_enc")
     )
-    # Explicit hash repartition on the group key: the pack stage is
-    # Python-CPU-bound, so partition count must track cores AND bound
-    # per-partition memory by posting count (AQE would coalesce this small
-    # shuffle to a handful of tasks and serialize the kernel).  The hash
+    # Explicit hash repartition on the group key: the partition count
+    # tracks cores, so every core runs a pack task, AND bounds per-partition
+    # memory by posting count (each task holds its whole partition; AQE
+    # would coalesce this small shuffle to a handful of tasks and serialize
+    # the kernel).  The hash
     # partitioner guarantees each (term, span_no) group lands whole in one
     # partition, which is what lets _pack_partition group locally.
     n_pack = max(

@@ -85,10 +85,13 @@ DECODED_SCHEMA = StructType(
 #: core-s of that is Python worker time (0.17-0.40 with the stock daemon,
 #: which re-read ``pyspark.zip`` in ``importlib.invalidate_caches()``
 #: before every task); the rest is the JVM side of a scan-and-Arrow task.
-#: One task decodes ~0.4-0.5 M postings/s.  An interleaved A/B of 50 000
-#: against 100 000 (9 runs per query) moved core-s by -5% to +9% on the
-#: queries whose partition count changed and by -6% on the 310k-posting
-#: term, whose plan did not: no support for a different value.
+#: The batched decode kernel runs 3.4-5.4 M postings/s without positions
+#: and 0.65-1.2 M with them (block by block: 0.38-0.84 M and 0.23-0.41 M;
+#: one pinned core, that index), so a task's start-up is now worth more
+#: postings than when this value was set.  It stays until an interleaved
+#: A/B supports another: one of 50 000 against 100 000 (9 runs per query,
+#: before the batched decode) moved core-s by -5% to +9% on the queries
+#: whose partition count changed and by -6% on the 310k-posting term.
 DECODE_POSTINGS_PER_TASK = 100_000
 
 
@@ -97,7 +100,8 @@ def decode_blocks(
 ) -> DataFrame:
     """Posting blocks → (term, doc_id, wdf, doc_len[, positions]) rows.
 
-    One numpy kernel per Arrow batch; inverse of indexer._pack_blocks.
+    Inverse of ``indexer._pack_partition``: one ``codec.decode_segments``
+    call per coded column per Arrow batch, over the batch's joined bytes.
     ``postings``: how many postings ``blocks`` holds at most, when the
     caller knows it from dictionary stats — the decode then runs on
     ``postings // DECODE_POSTINGS_PER_TASK + 1`` partitions.  Full-table
@@ -112,40 +116,28 @@ def decode_blocks(
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            terms_out: list[np.ndarray] = []
-            parts: list[pd.DataFrame] = []
-            for row in pdf.itertuples(index=False):
-                n = int(row.n)
-                d = codec.decode_docids(row.docids, n).astype(np.int64)
-                w = codec.decode_counts(row.wdfs, n).astype(np.int32)
-                dl = codec.decode_counts(row.doclens, n).astype(np.int32)
-                out = {
-                    "term": np.repeat(row.term, n),
-                    "doc_id": d,
-                    "wdf": w,
-                    "doc_len": dl,
-                }
-                if with_positions:
-                    counts = codec.vbyte_decode(row.pos_counts, n).astype(np.int64)
-                    segs = codec.decode_segmented(row.positions, counts)
-                    poss = np.empty(n, dtype=object)
-                    poss[:] = segs
-                    out["positions"] = poss
-                else:
-                    out["positions"] = np.full(n, None, dtype=object)
-                parts.append(pd.DataFrame(out))
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
+            n = pdf["n"].to_numpy(dtype=np.int64)
+
+            def decoded(col: str, counts: np.ndarray, delta: bool) -> np.ndarray:
+                return codec.decode_segments(b"".join(pdf[col].tolist()), counts, delta)
+
+            if with_positions:
+                npos = decoded("pos_counts", n, False).astype(np.int64)
+                flat = decoded("positions", npos, True).astype(np.int32)
+                bounds = np.concatenate(([0], np.cumsum(npos))).tolist()
+                positions = np.empty(len(npos), dtype=object)
+                positions[:] = [flat[lo:hi] for lo, hi in zip(bounds[:-1], bounds[1:])]
             else:
-                yield pd.DataFrame(
-                    {
-                        "term": pd.Series([], dtype=object),
-                        "doc_id": pd.Series([], dtype="int64"),
-                        "wdf": pd.Series([], dtype="int32"),
-                        "doc_len": pd.Series([], dtype="int32"),
-                        "positions": pd.Series([], dtype=object),
-                    }
-                )
+                positions = np.full(int(n.sum()), None, dtype=object)
+            yield pd.DataFrame(
+                {
+                    "term": np.repeat(pdf["term"].to_numpy(dtype=object), n),
+                    "doc_id": decoded("docids", n, True).astype(np.int64),
+                    "wdf": decoded("wdfs", n, False).astype(np.int32),
+                    "doc_len": decoded("doclens", n, False).astype(np.int32),
+                    "positions": positions,
+                }
+            )
 
     return blocks.mapInPandas(_decode, DECODED_SCHEMA)
 

@@ -13,6 +13,8 @@ _WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
 # applicationId → that SparkContext's memoized state (at most one entry)
 _per_context: dict[str, dict] = {}
 _per_context_lock = threading.Lock()
+# memoized key → the lock its builders hold (entries of the live context)
+_build_locks: dict = {}
 
 
 def context_cache(spark: SparkSession) -> dict:
@@ -27,8 +29,25 @@ def context_cache(spark: SparkSession) -> dict:
     with _per_context_lock:
         if app_id not in _per_context:
             _per_context.clear()
+            _build_locks.clear()
             _per_context[app_id] = {}
         return _per_context[app_id]
+
+
+def memoized(spark: SparkSession, key, build):
+    """``context_cache(spark)[key]``, built by ``build()`` on first use.
+
+    Concurrent first calls for one key run ``build`` once: the others wait
+    on that key's lock and get the same object.  Builders of other keys do
+    not wait.  A ``build`` that raises caches nothing.
+    """
+    cache = context_cache(spark)
+    with _per_context_lock:
+        lock = _build_locks.setdefault(key, threading.Lock())
+    with lock:
+        if key not in cache:
+            cache[key] = build()
+        return cache[key]
 
 
 def get_spark(

@@ -197,9 +197,11 @@ def compact(spark: SparkSession, root: str, out_path: str) -> IndexTables:
     Decodes the union of segment postings, drops tombstoned docs
     physically, re-blocks deterministically and commits one fresh index.
     """
+    import numpy as np
     import pandas as pd
 
-    from ..operators.indexer import POSTINGS_FLAT_SCHEMA, _encode_poslist
+    from ..functions import codec
+    from ..operators.indexer import POSTINGS_FLAT_SCHEMA, _segment_bytes
     from ..operators.matcher import decode_blocks
 
     mi = MultiIndex(spark, root)
@@ -210,11 +212,9 @@ def compact(spark: SparkSession, root: str, out_path: str) -> IndexTables:
 
     def reencode(batches):
         for pdf in batches:
-            poss = pdf["positions"]
-            enc = [
-                _encode_poslist(list(p)) if p is not None else None for p in poss
-            ]
-            npos = [len(p) if p is not None else 0 for p in poss]
+            poss = pdf["positions"].to_list()
+            npos = np.fromiter(map(len, poss), np.int64, len(poss))
+            flat = np.concatenate([np.empty(0, dtype=np.int64), *poss])
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
@@ -222,7 +222,9 @@ def compact(spark: SparkSession, root: str, out_path: str) -> IndexTables:
                     "wdf": pdf["wdf"],
                     "n_pos": pd.Series(npos, dtype="int32"),
                     "doc_len": pdf["doc_len"],
-                    "pos_enc": pd.Series(enc, dtype=object),
+                    "pos_enc": _segment_bytes(
+                        *codec.encode_segments(flat, npos, delta=True)
+                    ),
                 }
             )
 
