@@ -26,6 +26,31 @@ def test_docid_delta_roundtrip(vals):
     assert np.array_equal(codec.decode_docids(enc, len(arr)), arr)
 
 
+def _pack_uint(value: int) -> bytes:
+    """pack_uint (common/pack.h:315-325), one value at a time."""
+    out = bytearray()
+    while value >= 0x80:
+        out.append((value & 0x7F) | 0x80)
+        value >>= 7
+    out.append(value)
+    return bytes(out)
+
+
+@given(
+    st.lists(
+        st.one_of(st.integers(0, 0x7F), st.integers(0, 2**64 - 1)), max_size=300
+    )
+)
+@settings(max_examples=300, deadline=None)
+def test_vbyte_encode_matches_pack_uint(vals):
+    arr = np.array(vals, dtype=np.uint64)
+    packed = [_pack_uint(v) for v in vals]
+    assert codec.vbyte_encode(arr) == b"".join(packed)
+    # one value per segment: the offsets are pack_uint's byte counts
+    _, offsets = codec.encode_segments(arr, np.ones(len(vals)), delta=False)
+    assert np.diff(offsets).tolist() == [len(b) for b in packed]
+
+
 def test_single_byte_fast_path():
     arr = np.arange(0, 128, dtype=np.uint64)
     enc = codec.vbyte_encode(arr)

@@ -137,6 +137,41 @@ def test_concurrent_entries_on_one_session(spark, tmp_path):
         assert dict(zip(CONCURRENT_ENTRIES, rows)) == serial
 
 
+def test_concurrent_queries_on_one_matcher_keep_their_own_state(spark, index):
+    """Two threads querying one shared Matcher each get their serial top-10.
+
+    LMJM reads the query length (lmweight.cc picks lambda by it), so a
+    query planned with the other thread's length scores differently.  Each
+    trial uses a fresh Matcher: its cold term-stats lookup runs a Spark job
+    between the moment a query records its length and the moment its
+    weights read it."""
+    from xapian_spark.functions.weights import LMJMScheme
+    from xapian_spark.operators.matcher import Matcher
+    from xapian_spark.plans import query as Q
+
+    queries = [
+        Q.Term("return"),
+        Q.Or([Q.Term(t) for t in
+              ("return", "binary_search", "merge_sort", "if", "error")]),
+    ]
+
+    def top10(m, q):
+        return [(r["doc_id"], r["weight"].hex()) for r in m.mset(q, 10).df.collect()]
+
+    serial = [top10(Matcher(spark, index, scheme=LMJMScheme()), q) for q in queries]
+    assert serial[0] and serial[1]
+    for _ in range(3):
+        m = Matcher(spark, index, scheme=LMJMScheme())
+        barrier = threading.Barrier(2)
+
+        def run(q, m=m, barrier=barrier):
+            barrier.wait(timeout=120)
+            return top10(m, q)
+
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            assert list(pool.map(run, queries)) == serial
+
+
 def test_context_cache_follows_the_live_context(monkeypatch):
     from xapian_spark import session
 

@@ -1,4 +1,5 @@
-"""The session's Python worker daemon (``xapian_spark.pydaemon``)."""
+"""The session's Python worker daemon (``xapian_spark.pydaemon``) and its
+local relations for rows held on the driver (``session.local_df``)."""
 
 from __future__ import annotations
 
@@ -13,6 +14,8 @@ import zipimport
 import pandas as pd
 
 from xapian_spark import pydaemon
+from xapian_spark.plans import query as Q
+from xapian_spark.session import local_df
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -108,3 +111,54 @@ def test_session_from_foreign_cwd_without_pythonpath(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-3000:]
     assert "ROWS [1, 2, 3]" in out.stdout
+
+
+def _job_ids(spark) -> set:
+    """Ids of the jobs the session has run so far (listener bus drained)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(None) or ())
+
+
+def _collect_without_jobs(spark, df):
+    before = _job_ids(spark)
+    rows = df.collect()
+    assert _job_ids(spark) == before, "collecting driver rows ran a Spark job"
+    return rows
+
+
+def test_local_df_round_trip_runs_no_job(spark):
+    rows = [
+        (2**31, -(2**40), 0.1, "a", [1.5, -0.0]),
+        (-1, 2**62, -1e300, "", []),
+        (None, None, None, None, None),
+        (7, 0, 5e-324, None, [None, 2.0]),
+    ]
+    ddl = "a long, b bigint, x double, s string, v array<double>"
+    df = local_df(spark, rows, ddl)
+    assert df.schema.simpleString() == (
+        "struct<a:bigint,b:bigint,x:double,s:string,v:array<double>>"
+    )
+    got = [tuple(r) for r in _collect_without_jobs(spark, df)]
+    assert [r[:2] + r[3:] for r in got] == [r[:2] + r[3:] for r in rows]
+    # doubles bit for bit (-0.0 and the smallest subnormal included)
+    def hexes(rs):
+        return [x if x is None else x.hex() for r in rs for x in (r[2], *(r[4] or ()))]
+
+    assert hexes(got) == hexes(rows)
+
+    empty = local_df(spark, [], "doc_id long, weight double")
+    assert empty.schema.simpleString() == "struct<doc_id:bigint,weight:double>"
+    assert _collect_without_jobs(spark, empty) == []
+
+
+def test_mset_rows_collect_without_a_job(spark, matcher):
+    q = Q.Or([Q.Term("return"), Q.Term("binary_search")])
+    res = matcher.mset(q, 10)
+    rows = _collect_without_jobs(spark, res.df)
+    assert [r["rank"] for r in rows] == list(range(1, 11))
+    pruned = _collect_without_jobs(spark, matcher.mset_df(q, 10, prune=True))
+    assert matcher.last_prune_decision == "pruned"
+    assert len(pruned) == 10
+    none = matcher.mset(Q.MatchNothing())
+    assert _collect_without_jobs(spark, none.df) == []

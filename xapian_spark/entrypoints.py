@@ -26,7 +26,7 @@ from .functions.weights import BM25Params
 from .operators.indexer import build_index
 from .operators.matcher import Matcher
 from .plans import query as Q
-from .session import memoized
+from .session import local_df, memoized
 
 K1, B = 1.0, 0.5  # BM25 defaults (weight.h:1128-1142); k2=0, k3=1, wqf=1
 ROUND = 6
@@ -344,21 +344,11 @@ def _q_wand_topk(query: Q.Query, k: int, prune=True):
         # to ≤ that value).  If rounding collapses the boundary, fall back
         # to the exhaustive rounded ranking — exactness over speed.
         n = 2 * k + 1
-        # rows_out: the WAND kernel already collected the top-n to the
-        # driver; read them from there instead of a createDataFrame→collect
-        # round trip on the returned local relation (~0.3 s of fixed job
-        # overhead saved per query).  It stays empty when the exhaustive
-        # plan ran, so ``df`` is collected then (an empty pruned top-k
-        # collects an empty local relation: same rows).
-        raw: list = []
-        df = m.mset_df(query, n, prune=prune, rows_out=raw)
-        rows = raw or [
-            (int(r["doc_id"]), float(r["weight"])) for r in df.collect()
-        ]
+        rows = m.mset_df(query, n, prune=prune).collect()
         # HALF_UP like F.round / the SQL oracle — builtin round() is
         # half-even and can diverge on an exact-half score (ADVICE r04)
         ranked = sorted(
-            ((float(w), int(d)) for d, w in rows),
+            ((float(r["weight"]), int(r["doc_id"])) for r in rows),
             key=lambda x: (-_round_half_up(x[0]), x[1]),
         )
         if len(rows) >= n and k >= 1:
@@ -366,7 +356,8 @@ def _q_wand_topk(query: Q.Query, k: int, prune=True):
             tail_raw = min(w for w, _ in ranked)
             if not (kth > _round_half_up(tail_raw)):
                 return _topk(m, query, k)
-        return spark.createDataFrame(
+        return local_df(
+            spark,
             [(d, _round_half_up(w)) for w, d in ranked[:k]],
             "doc_id long, score double",
         )
@@ -644,7 +635,7 @@ GROUP BY s.doc_id ORDER BY score DESC, doc_id ASC LIMIT 30""",
 def _q_match_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = get_matcher(spark, sf_dir)
     n = m.count_matches(Q.And([Q.Term("hash"), Q.Term("join")]))
-    return spark.createDataFrame([(n,)], "matches long")
+    return local_df(spark, [(n,)], "matches long")
 
 
 _register(
@@ -662,7 +653,8 @@ SELECT count(*)::BIGINT AS matches FROM (
 def _q_collection_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = get_matcher(spark, sf_dir)
     s = m.index.stats
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [(s["doccount"], s["total_length"], _round_half_up(s["avg_length"]))],
         "doccount long, total_length long, avg_length double",
     )
@@ -1405,7 +1397,7 @@ def _q_percent(spark: SparkSession, sf_dir: str) -> DataFrame:
         (r["doc_id"], _round_half_up(r["weight"]), res.percents[r["doc_id"]])
         for r in res.df.collect()
     ]
-    return spark.createDataFrame(rows, "doc_id long, score double, percent int")
+    return local_df(spark, rows, "doc_id long, score double, percent int")
 
 
 _register(
@@ -1452,7 +1444,7 @@ def _q_percent_cutoff(spark: SparkSession, sf_dir: str) -> DataFrame:
         (r["doc_id"], _round_half_up(r["weight"]), res.percents[r["doc_id"]])
         for r in res.df.collect()
     ]
-    return spark.createDataFrame(rows, "doc_id long, score double, percent int")
+    return local_df(spark, rows, "doc_id long, score double, percent int")
 
 
 _register(
@@ -1654,9 +1646,7 @@ def _q_reconstruct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     m = get_matcher(spark, sf_dir)
     rows = [(int(d), reconstruct_text(m.index, int(d))) for d in _RECON_DOCS]
-    return spark.createDataFrame(
-        rows, "doc_id bigint, rtext string"
-    ).orderBy("doc_id")
+    return local_df(spark, rows, "doc_id bigint, rtext string").orderBy("doc_id")
 
 
 _register(

@@ -40,25 +40,35 @@ __all__ = [
 
 def _vbyte(v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """VByte bytes (uint8) of a uint64 array, and each value's byte count."""
-    if v.size == 0 or int(v.max()) < 0x80:
-        # Fast path: every value fits one byte.
-        return v.astype(np.uint8), np.ones(v.shape, dtype=np.int64)
-    # Number of 7-bit groups needed per value (at least 1), computed with a
-    # vectorized shift loop (≤10 iterations for 64-bit values).
-    tmp = v >> np.uint64(7)
+    big = np.flatnonzero(v >= np.uint64(0x80))
     ngroups = np.ones(v.shape, dtype=np.int64)
+    if big.size == 0:
+        # Fast path: every value fits one byte.
+        return v.astype(np.uint8), ngroups
+    # Only the multi-byte values go through the group loops, so a long
+    # array with a few of them costs about what an all-single-byte one
+    # does.  Their 7-bit group counts (2..10 for 64-bit values):
+    vb = v[big]
+    tmp = vb >> np.uint64(7)
+    nb = np.ones(big.size, dtype=np.int64)
     while tmp.any():
-        ngroups += tmp > 0
+        nb += tmp > 0
         tmp >>= np.uint64(7)
-    out = np.empty(int(ngroups.sum()), dtype=np.uint8)
+    ngroups[big] = nb
     # Output offset of each value's first byte.
     offs = np.cumsum(ngroups) - ngroups
-    # Write groups position-by-position (max 10 iterations for 64-bit).
-    for k in range(int(ngroups.max())):
-        alive = ngroups > k
-        group = ((v[alive] >> np.uint64(7 * k)) & np.uint64(0x7F)).astype(np.uint8)
-        group[ngroups[alive] > k + 1] |= 0x80
-        out[offs[alive] + k] = group
+    out = np.empty(int(offs[-1] + ngroups[-1]), dtype=np.uint8)
+    # Every value's first byte in one step: its low 7 bits, with the
+    # continuation bit set on the multi-byte ones.
+    first = v.astype(np.uint8)
+    first[big] |= 0x80
+    out[offs] = first
+    ob = offs[big]
+    for k in range(1, int(nb.max())):
+        alive = nb > k
+        group = ((vb[alive] >> np.uint64(7 * k)) & np.uint64(0x7F)).astype(np.uint8)
+        group[nb[alive] > k + 1] |= 0x80
+        out[ob[alive] + k] = group
     return out, ngroups
 
 

@@ -18,6 +18,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_df
 from .indexer import IndexTables
 from .matcher import decode_blocks
 
@@ -187,7 +188,7 @@ def lcd_clusters(
     ]
     size = len(order)
     if size == 0:
-        return spark.createDataFrame([], "doc_id long, cluster int")
+        return local_df(spark, [], "doc_id long, cluster int")
     k_ = min(k, size)
 
     pts = lcd_point_vectors(index, mset.select("doc_id"), size)
@@ -237,7 +238,7 @@ def lcd_clusters(
             break
         remaining = [d for d in remaining if d not in set(members)]
         center = cand[-1]
-    return spark.createDataFrame(out, "doc_id long, cluster int")
+    return local_df(spark, out, "doc_id long, cluster int")
 
 
 def lloyd_kmeans(

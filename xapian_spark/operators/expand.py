@@ -23,6 +23,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_df
 from .indexer import IndexTables
 from .matcher import decode_blocks
 
@@ -42,7 +43,7 @@ def eset_bo1(
     whose raw weights differ only past the n-th decimal tie identically on
     both sides)."""
     if not rset:
-        return spark.createDataFrame([], "term string, wt double")
+        return local_df(spark, [], "term string, wt double")
     ids = sorted(set(int(i) for i in rset))
     ids_arr = F.array(*[F.lit(i) for i in ids])
     touching = index.postings.filter(
@@ -97,7 +98,7 @@ def eset_prob(
     ExpandDecider analog for boolean field prefixes (which the wdf→1 rule
     would otherwise surface — expandweight.h:78-80)."""
     if not rset:
-        return spark.createDataFrame([], "term string, wt double")
+        return local_df(spark, [], "term string, wt double")
     ids = sorted(set(int(i) for i in rset))
     rsize = float(len(ids))
     ids_arr = F.array(*[F.lit(i) for i in ids])

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.weights import BM25Scheme
+from ..session import local_df
 from .indexer import IndexTables
 from .matcher import Matcher
 
@@ -41,12 +42,13 @@ def ltr_features(
     stats = m._term_stats(query_terms)
     known = [t for t in dict.fromkeys(query_terms) if t in stats]
     if not known:
-        return spark.createDataFrame(
-            [], "doc_id long, f1 double, f2 double, f3 double, f4 double, f5 double, f6 double"
+        return local_df(
+            spark, [], "doc_id long, f1 double, f2 double, f3 double, f4 double, f5 double, f6 double"
         )
     n = float(index.stats["doccount"])
     total_len = float(index.stats["total_length"])
-    consts = spark.createDataFrame(
+    consts = local_df(
+        spark,
         [
             (
                 t,

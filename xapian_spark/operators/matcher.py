@@ -39,6 +39,7 @@ task costs ~0.2 core-s, most of it on the JVM side.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Iterator
 from dataclasses import dataclass
 
@@ -59,6 +60,7 @@ from pyspark.sql.types import (
 from ..functions import codec
 from ..functions.weights import BM25Params
 from ..plans import query as Q
+from ..session import local_df
 from .indexer import IndexTables
 
 DECODED_SCHEMA = StructType(
@@ -287,6 +289,15 @@ def convert_to_percent(weight: float, max_possible: float) -> int:
     return percent
 
 
+class _QueryState(threading.local):
+    """A Matcher's per-query state, one copy per calling thread, so
+    concurrent queries on one shared Matcher never read each other's."""
+
+    ql = 1  # query length of the query being evaluated
+    leaf_counter = 0  # last leaf-fold position handed out (_next_ord)
+    prune_decision = "exhaustive"  # the path the last mset_df took
+
+
 class Matcher:
     """One matcher per index; queries share broadcast stats + dictionary."""
 
@@ -313,18 +324,18 @@ class Matcher:
         if synonym_tf not in ("exact", "estimate"):
             raise ValueError("synonym_tf must be 'exact' or 'estimate'")
         self.synonym_tf = synonym_tf
-        self._leaf_counter = 0
+        self._q = _QueryState()
         self._stats_cache: dict[str, tuple[int, int, int] | None] = {}
         # exact merged-termfreq per synonym term set — valid for the
         # Matcher's lifetime (the index is immutable), filled either by
         # mset's batched aggregation or by _syn_tf_exact on first need,
         # so no term set is ever counted more than once
         self._syn_tf_cache: dict[tuple[str, ...], int] = {}
-        self._ql = 1  # query length of the query being evaluated
-        # which path the most recent mset_df took; initialized here so a
-        # first-call MatchNothing query never exposes an unset attribute
-        # (ADVICE r05), and set before every early return below
-        self.last_prune_decision = "exhaustive"
+
+    @property
+    def last_prune_decision(self) -> str:
+        """Which path the calling thread's most recent ``mset_df`` took."""
+        return self._q.prune_decision
 
     # ---------------- public API ----------------
 
@@ -397,9 +408,7 @@ class Matcher:
         _did = F.desc("doc_id") if docid_order == "desc" else F.asc("doc_id")
         q = Q.normalize(q)
         if isinstance(q, Q.MatchNothing):
-            empty = self.spark.createDataFrame(
-                [], "rank long, doc_id long, weight double"
-            )
+            empty = local_df(self.spark, [], "rank long, doc_id long, weight double")
             return MSetResult(df=empty, matches=0)
         matched = self._matched(q)
         max_possible = None
@@ -492,7 +501,8 @@ class Matcher:
             )
         ranked = matched.orderBy(*order).limit(first + maxitems)
         rows = ranked.collect()[first : first + maxitems]
-        out = self.spark.createDataFrame(
+        out = local_df(
+            self.spark,
             [(i + 1 + first, r["doc_id"], float(r["weight"])) for i, r in enumerate(rows)],
             "rank long, doc_id long, weight double",
         )
@@ -578,7 +588,7 @@ class Matcher:
             cf = sum(stats[t][1] for t in known)
             w = self.scheme.init(
                 termfreq=tf, collfreq=cf, stats=self.index.stats, wqf=1,
-                factor=factor, query_length=self._ql,
+                factor=factor, query_length=self._q.ql,
             )
             wdf_max = min(
                 sum(stats[t][2] for t in known),
@@ -599,7 +609,6 @@ class Matcher:
         q: Q.Query,
         k: int,
         prune: bool | str = False,
-        rows_out: list | None = None,
     ) -> DataFrame:
         """Top-k as a pure DataFrame (TakeOrderedAndProject, no collect) —
         the path bench + the driver contract use.
@@ -615,13 +624,14 @@ class Matcher:
         Spark job — the same memoized termfreq lookup every scheme's init
         needs): pruned only when Σ termfreq ≥ ``WAND_AUTO_MIN_POSTINGS``,
         i.e. when decode volume dwarfs the pruned path's fixed overhead.
-        The choice taken is recorded in ``self.last_prune_decision``.
+        The choice taken is recorded in ``self.last_prune_decision``
+        (per calling thread).
         """
         q = Q.normalize(q)
-        self.last_prune_decision = "exhaustive"
+        self._q.prune_decision = "exhaustive"
         if isinstance(q, Q.MatchNothing):
-            return self.spark.createDataFrame([], "doc_id long, weight double")
-        self._ql = max(_query_len(q), 1)
+            return local_df(self.spark, [], "doc_id long, weight double")
+        self._q.ql = max(_query_len(q), 1)
         if prune and k > 0 and self.index.tombstones is None:
             from ..functions.weights import BM25Scheme
 
@@ -635,15 +645,15 @@ class Matcher:
                         if total_tf < self.WAND_AUTO_MIN_POSTINGS:
                             leaf_terms = None
                     if leaf_terms is not None:
-                        self.last_prune_decision = "pruned"
-                        return self._wand(leaf_terms, k, rows_out=rows_out)
+                        self._q.prune_decision = "pruned"
+                        return self._wand(leaf_terms, k)
         return self._matched(q).orderBy(F.desc("weight"), F.asc("doc_id")).limit(k)
 
     def _matched(self, q: Q.Query) -> DataFrame:
         """Scored DF(doc_id, weight) of a normalized, non-empty query: live
         docs only, sumextra added — the plan every ranking entry point
         orders."""
-        self._leaf_counter = 0
+        self._q.leaf_counter = 0
         return self._apply_sumextra(self._tombfilter(self._eval(q, factor=1.0)), q)
 
     def _tombfilter(self, df: DataFrame) -> DataFrame:
@@ -668,7 +678,6 @@ class Matcher:
         leaf_terms: list[tuple[str, int]],
         k: int,
         stats_out: dict | None = None,
-        rows_out: list | None = None,
     ) -> DataFrame:
         from .wand import wand_topk
 
@@ -689,7 +698,6 @@ class Matcher:
             k,
             self.scheme.params,
             stats_out=stats_out,
-            rows_out=rows_out,
         )
 
     def matches(self, q: Q.Query) -> DataFrame:
@@ -800,7 +808,7 @@ class Matcher:
             stats=self.index.stats,
             wqf=wqf,
             factor=factor,
-            query_length=self._ql,
+            query_length=self._q.ql,
         )
 
     def _decoded_for_terms(
@@ -887,17 +895,17 @@ class Matcher:
         )
 
     def _empty(self) -> DataFrame:
-        return self.spark.createDataFrame([], "doc_id long, weight double")
+        return local_df(self.spark, [], "doc_id long, weight double")
 
     def _next_ord(self) -> int:
-        self._leaf_counter += 1
-        return self._leaf_counter
+        self._q.leaf_counter += 1
+        return self._q.leaf_counter
 
     # ---------------- evaluation ----------------
 
     def _eval(self, q: Q.Query, factor: float) -> DataFrame:
         """Weighted evaluation → DF(doc_id unique, weight double)."""
-        self._ql = max(_query_len(q), 1)
+        self._q.ql = max(_query_len(q), 1)
         stats = self._term_stats(q.terms())
         return self._eval_inner(q, factor, stats)
 
@@ -1030,19 +1038,19 @@ class Matcher:
     # -- boolean-only evaluation (FILTER/AND_NOT right sides): skips scoring,
     #    Catalyst prunes the wdf/doclen decode columns.
     def _eval_bool(self, q: Q.Query) -> DataFrame:
-        self._ql = max(_query_len(q), 1)
+        self._q.ql = max(_query_len(q), 1)
         stats = self._term_stats(q.terms())
         return self._eval_bool_inner(q, stats)
 
     def _eval_bool_inner(self, q: Q.Query, stats: dict) -> DataFrame:
         if isinstance(q, Q.Term):
             if q.term not in stats:
-                return self.spark.createDataFrame([], "doc_id long")
+                return local_df(self.spark, [], "doc_id long")
             return self._decoded_for_terms([q.term]).select("doc_id")
         if isinstance(q, Q.MatchAll):
             return self.index.docs.select("doc_id")
         if isinstance(q, Q.MatchNothing):
-            return self.spark.createDataFrame([], "doc_id long")
+            return local_df(self.spark, [], "doc_id long")
         if isinstance(q, Q.ValueRange):
             return self._value_range_docids(q)
         if isinstance(q, Q.PostingSource):
@@ -1180,7 +1188,7 @@ class Matcher:
             self.index.stats,
             wqf=1,
             factor=factor,
-            query_length=self._ql,
+            query_length=self._q.ql,
         )
         consts = cand.select("term", "termfreq", "collfreq")
         blocks = self.index.postings.join(
@@ -1290,7 +1298,7 @@ class Matcher:
             self.index.stats,
             wqf=1,
             factor=factor,
-            query_length=self._ql,
+            query_length=self._q.ql,
         )
         return scored.select(
             "doc_id",

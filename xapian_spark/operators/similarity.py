@@ -22,7 +22,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import context_cache
+from ..session import context_cache, local_df
 
 
 def _dot(a, b):
@@ -645,7 +645,8 @@ class AnnIvfIndex:
         """
         rd = self.round_digits if round_digits is None else round_digits
         spark = queries.sparkSession
-        cents = spark.createDataFrame(
+        cents = local_df(
+            spark,
             [
                 (c, [float(x) for x in v])
                 for c, v in sorted(self.centroids.items())

@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_df
 from .indexer import IndexTables
 
 
@@ -157,7 +158,7 @@ def suggest(
         return None
     max_edit_distance = min(max_edit_distance, len(word) - 1)
     tri = trigrams if trigrams is not None else trigram_table(index.dictionary)
-    target = spark.createDataFrame([(g,) for g in _trigrams(word)], "trigram string")
+    target = local_df(spark, [(g,) for g in _trigrams(word)], "trigram string")
     cands = (
         tri.join(F.broadcast(target), "trigram")
         .groupBy("term")

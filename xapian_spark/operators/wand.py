@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.weights import BM25Params, BM25Term
+from ..session import local_df
 from .indexer import TIER_SHIFT
 from .matcher import decode_blocks
 
@@ -66,7 +67,6 @@ def wand_topk(
     params: BM25Params,
     probe_blocks_per_term: int = 4,
     stats_out: dict | None = None,
-    rows_out: list | None = None,
 ) -> DataFrame:
     """Exact top-k (doc_id, weight) for OR over ``term_weights`` keys.
 
@@ -76,12 +76,6 @@ def wand_topk(
     (blocks_total / blocks_pruned / candidates) — the scale evidence is the
     pruned fraction, since at 10^12-doc block counts skipped blocks are
     skipped parquet IO.
-
-    ``rows_out``: pass a list to ALSO receive the exact top-k as
-    (doc_id, weight) tuples — they are already on the driver (the kernel
-    collects them to release its caches), so a caller that wants rows can
-    skip the createDataFrame→collect round trip on the returned local
-    relation (~0.3 s of fixed job overhead per query on this box).
     """
     terms = sorted(term_weights)
     if not terms:
@@ -89,7 +83,7 @@ def wand_topk(
             stats_out.update(
                 {"theta": float("-inf"), "blocks_total": 0, "blocks_pruned": 0}
             )
-        return spark.createDataFrame([], "doc_id long, weight double")
+        return local_df(spark, [], "doc_id long, weight double")
 
     # Per-term constants attach as literal CASE columns, NOT a broadcast
     # join: a query has a handful of terms, and every F.broadcast(consts)
@@ -365,9 +359,7 @@ def wand_topk(
     if cand is not None:
         cand.unpersist()
     out = [(r["doc_id"], float(r["weight"])) for r in rows]
-    if rows_out is not None:
-        rows_out.extend(out)
-    return spark.createDataFrame(out, "doc_id long, weight double")
+    return local_df(spark, out, "doc_id long, weight double")
 
 
 def _tier_cutoffs(

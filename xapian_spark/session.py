@@ -5,7 +5,7 @@ from __future__ import annotations
 import os
 import threading
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # the directory that holds the ``xapian_spark`` package
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -48,6 +48,28 @@ def memoized(spark: SparkSession, key, build):
         if key not in cache:
             cache[key] = build()
         return cache[key]
+
+
+def local_df(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """DataFrame with schema ``ddl`` over ``rows``, tuples held on the driver.
+
+    The rows reach Spark as an Arrow table, so the result is a
+    ``LocalRelation``: collecting it runs no job (a Python list becomes a
+    parallelized RDD that Python tasks scan), and Catalyst drops an empty
+    one from unions and joins.  Arrow, not pandas: PySpark takes an Arrow
+    table this way whatever the session's Arrow setting is, while pandas
+    input is gated on it, an empty frame takes the RDD path anyway, and
+    pandas turns ``None`` in a long column into NaN.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    struct = DataType.fromDDL(ddl)
+    schema = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(schema)
+    arrays = [pa.array(c, type=f.type) for c, f in zip(cols, schema)]
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=schema), struct)
 
 
 def get_spark(

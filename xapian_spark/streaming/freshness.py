@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.indexer import IndexTables, build_index
+from ..session import local_df
 from ..sources.catalog import MANIFEST, load_index, save_index
 
 
@@ -177,7 +178,7 @@ class MultiIndex:
         ids = json.load(open(p))
         if not ids:
             return None
-        return self.spark.createDataFrame([(int(i),) for i in ids], "doc_id long")
+        return local_df(self.spark, [(int(i),) for i in ids], "doc_id long")
 
     def delete_documents(self, doc_ids: list[int]) -> None:
         """delete_document analog (include/xapian/database.h:1016+): logical
