@@ -46,18 +46,6 @@ def test_ltr_f6_is_bm25(spark, index, oracle):
         assert abs(feats[d] - w) < 1e-9
 
 
-def test_kmeans_clusters(spark, index):
-    from xapian_spark.operators.cluster import kmeans_clusters
-
-    out = kmeans_clusters(spark, index, k=4, max_iter=5)
-    rows = out.collect()
-    assert len(rows) == index.docs.filter("doc_len > 0").count()
-    assert set(r["cluster"] for r in rows) <= set(range(4))
-    # deterministic with fixed seed
-    again = {r["doc_id"]: r["cluster"] for r in kmeans_clusters(spark, index, k=4, max_iter=5).collect()}
-    assert all(again[r["doc_id"]] == r["cluster"] for r in rows)
-
-
 def _mirror_lcd(oix, mrows, k, digits=4):
     """Pure-Python replay of LCDClusterer::cluster
     (cluster/lcd_clusterer.cc:62-153) over the oracle index — the same

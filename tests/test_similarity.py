@@ -182,11 +182,17 @@ def test_embedding_near_dups_bucket_cap(emb, ann):
     } == uncapped
 
 
-def test_lloyd_kmeans_matches_pure_python(emb):
+@pytest.mark.parametrize("chunk", ["batch", "one_row"])
+def test_lloyd_kmeans_matches_pure_python(emb, monkeypatch, chunk):
     """Engine Lloyd's ≡ an independent pure-Python replay (same init, same
-    per-step rounding) — the exactness contract the SQL oracle relies on."""
+    per-step rounding) — the exactness contract the SQL oracle relies on.
+    ``one_row`` scores the distance tensor one row per chunk, which must
+    not move a single bit."""
+    from xapian_spark.operators import cluster
     from xapian_spark.operators.cluster import lloyd_kmeans
 
+    if chunk == "one_row":
+        monkeypatch.setattr(cluster, "_DIFF_ELEMS", 1)
     k, iters, rd = 4, 3, 4
     rows = sorted(
         ((r["vec_id"], [float(x) for x in r["embedding"]]) for r in emb.collect())

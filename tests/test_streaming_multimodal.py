@@ -1,4 +1,4 @@
-"""Segments / incremental freshness / compaction / streaming dedup."""
+"""Segments / incremental freshness / compaction / foreachBatch streaming appends."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -85,49 +85,6 @@ def test_streaming_foreachbatch(spark, corpus, tmp_path):
     assert ix.stats["doccount"] == corpus.count()
 
 
-def test_streaming_stateful_first_seen(spark, tmp_path):
-    """applyInPandasWithState cross-batch dedup: a duplicate arriving in a
-    LATER micro-batch is suppressed by state carried across batches."""
-    import glob
-    import os
-    import shutil
-
-    from xapian_spark.streaming.stateful import streaming_first_seen
-
-    src = tmp_path / "in"
-    src.mkdir()
-    batches = [
-        [(1, "aaa"), (2, "bbb")],
-        [(3, "aaa"), (4, "ccc")],  # doc 3 duplicates batch-1 content
-    ]
-    for i, rows in enumerate(batches):
-        stage = tmp_path / f"stage{i}"
-        spark.createDataFrame(rows, "doc_id long, content string").coalesce(
-            1
-        ).write.mode("overwrite").parquet(str(stage))
-        part = glob.glob(str(stage / "part-*.parquet"))[0]
-        dst = str(src / f"batch{i}.parquet")
-        shutil.copy(part, dst)
-        os.utime(dst, (1_000_000 + i, 1_000_000 + i))  # stable batch order
-
-    stream = (
-        spark.readStream.schema("doc_id long, content string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        streaming_first_seen(stream)
-        .writeStream.format("memory")
-        .queryName("first_seen_t")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r["doc_id"] for r in spark.sql("SELECT * FROM first_seen_t").collect()}
-    assert got == {1, 2, 4}
-
-
 def test_multiindex_caps_tiered_segments(spark, monkeypatch, tmp_path):
     """A tiered segment's impact bits live at block_no bits 60-61, so only
     16 salt ordinals are safe — MultiIndex must refuse the 17th segment
@@ -159,78 +116,3 @@ def test_multiindex_caps_tiered_segments(spark, monkeypatch, tmp_path):
     )
     with pytest.raises(AttributeError):
         mi.load()
-
-
-def test_bloom_filter_state_semantics():
-    """BloomFilter unit: membership, constant serialized size, no false
-    negatives; _admit skips state writes on duplicate-only input."""
-    import hashlib
-
-    from xapian_spark.streaming.stateful import BloomFilter, _admit
-
-    bf = BloomFilter(bits=1 << 14, k=5)
-    hs = [hashlib.md5(f"doc{i}".encode()).hexdigest() for i in range(200)]
-    ids0, out0, n0 = _admit(bf, range(200), hs)
-    assert n0 == len(ids0) == 200  # tiny fill ratio → no FP collisions here
-    # no false negatives: everything added is contained
-    assert all(h in bf for h in hs)
-    # constant state size regardless of content count
-    assert len(bf.tobytes()) == (1 << 14) // 8
-    # round-trip through the serialized state
-    bf2 = BloomFilter(bits=1 << 14, k=5, buf=bf.tobytes())
-    ids1, out1, n1 = _admit(bf2, range(200), hs)
-    assert n1 == 0 and ids1 == []  # duplicate-only → caller skips update
-    assert bf2.tobytes() == bf.tobytes()
-
-
-def test_admit_skips_update_for_duplicates():
-    from xapian_spark.streaming.stateful import _admit
-
-    seen = set()
-    ids, hs, n = _admit(seen, [1, 2, 3], ["a", "b", "a"])
-    assert (ids, hs, n) == ([1, 2], ["a", "b"], 2)
-    ids, hs, n = _admit(seen, [4, 5], ["a", "b"])
-    assert n == 0  # duplicate-only batch → streaming kernel skips update
-
-
-def test_streaming_stateful_first_seen_bloom(spark, tmp_path):
-    """The bloom state variant produces the same first-seen set on this
-    corpus (FP rate negligible at this fill) with constant-size state."""
-    import glob
-    import os
-    import shutil
-
-    from xapian_spark.streaming.stateful import streaming_first_seen
-
-    src = tmp_path / "in"
-    src.mkdir()
-    batches = [
-        [(1, "aaa"), (2, "bbb")],
-        [(3, "aaa"), (4, "ccc")],
-    ]
-    for i, rows in enumerate(batches):
-        stage = tmp_path / f"stage{i}"
-        spark.createDataFrame(rows, "doc_id long, content string").coalesce(
-            1
-        ).write.mode("overwrite").parquet(str(stage))
-        part = glob.glob(str(stage / "part-*.parquet"))[0]
-        dst = str(src / f"batch{i}.parquet")
-        shutil.copy(part, dst)
-        os.utime(dst, (1_000_000 + i, 1_000_000 + i))
-
-    stream = (
-        spark.readStream.schema("doc_id long, content string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        streaming_first_seen(stream, state="bloom", bloom_bits=1 << 16)
-        .writeStream.format("memory")
-        .queryName("first_seen_bloom_t")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r["doc_id"] for r in spark.sql("SELECT * FROM first_seen_bloom_t").collect()}
-    assert got == {1, 2, 4}

@@ -1670,8 +1670,7 @@ _KM_K, _KM_ITERS = 4, 3
 def _q_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic fixed-iteration Lloyd's over the embeddings table —
     cluster sizes after _KM_ITERS assignment steps (cluster/kmeans.cc
-    semantics, engineered for cross-engine replay; the MLlib TF-IDF
-    clusterer kmeans_clusters keeps its own pytest coverage)."""
+    semantics, engineered for cross-engine replay)."""
     from .operators.cluster import lloyd_kmeans
 
     cl = lloyd_kmeans(

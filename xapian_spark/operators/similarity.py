@@ -10,9 +10,6 @@
   its own ``bands`` bucket keys (a metadata-pruned filter, not a scan),
   then exactly re-ranks only the candidates.  ``knn_join`` batches many
   query vectors through the same bucket join.
-- lsh_bucketed_topk: one-shot convenience wrapper over AnnLshIndex for a
-  single query (builds the index unpersisted; prefer the class when asking
-  more than one query).
 """
 
 from __future__ import annotations
@@ -493,28 +490,6 @@ def embedding_near_dups(
         j.select("a", "b", F.round(cos, round_digits).alias("cos"))
         .filter(F.col("cos") >= threshold)
     )
-
-
-def lsh_bucketed_topk(
-    emb: DataFrame,
-    qvec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 16,
-    bands: int = 4,
-    round_digits: int = 4,
-    index: AnnLshIndex | None = None,
-) -> DataFrame:
-    """ANN: candidates = rows sharing ≥1 LSH band with the query, re-ranked
-    by exact cosine.  Recall < 1 by construction (approximate).  Pass a
-    prebuilt ``index`` to amortize signature materialization across queries."""
-    if index is None:
-        index = AnnLshIndex(
-            emb, len(qvec), id_col=id_col, vec_col=vec_col,
-            n_planes=n_planes, bands=bands, persist=False,
-        )
-    return index.query(qvec, k=k, round_digits=round_digits)
 
 
 class AnnIvfIndex:

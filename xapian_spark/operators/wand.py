@@ -41,6 +41,9 @@ from ..session import local_df
 from .indexer import TIER_SHIFT
 from .matcher import decode_blocks
 
+# phase 1 scores this many highest-bound blocks per term exactly to seed θ
+PROBE_BLOCKS_PER_TERM = 4
+
 
 def _bound_col(params: BM25Params, tw_col, lf_col, max_wdf, min_doclen):
     """Block-level maxpart as a Column expression (bm25weight.cc:180-202
@@ -65,7 +68,6 @@ def wand_topk(
     doclen_lower_bound: int,
     k: int,
     params: BM25Params,
-    probe_blocks_per_term: int = 4,
     stats_out: dict | None = None,
 ) -> DataFrame:
     """Exact top-k (doc_id, weight) for OR over ``term_weights`` keys.
@@ -139,7 +141,7 @@ def wand_topk(
     w = Window.partitionBy("term").orderBy(F.desc("bound"), F.asc("block_no"))
     probe_keys = (
         meta.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= probe_blocks_per_term)
+        .filter(F.col("rn") <= PROBE_BLOCKS_PER_TERM)
         .select("term", "block_no")
     )
     probe_blocks = postings.join(F.broadcast(probe_keys), ["term", "block_no"], "left_semi")
