@@ -23,7 +23,7 @@ scores are bit-comparable (tests assert 1e-9).
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
+from dataclasses import dataclass, fields, replace
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -33,13 +33,31 @@ def _c(v) -> Column:
     """``lit()`` for floats, pass-through for Columns.
 
     Every scheme's per-term state is a handful of scalars computed by
-    ``init()`` from (termfreq, collfreq, global stats).  The term-set
-    paths (matcher._eval_term_set_distributed, matcher._eval_synonym)
-    initialize the SAME TermWeight dataclasses via ``init_col()`` with
-    termfreq / collfreq as Columns — so those fields become Column
-    expressions and the ``sumpart_col`` formulas must lift them with ``_c``
-    instead of ``F.lit``.  The scalar path is unchanged (lit of a float)."""
+    ``init()`` from (termfreq, collfreq, global stats).  In a query plan
+    they are Columns: the term-keyed kernels read them per row
+    (``over_fields``), and the dictionary-driven paths compute them with
+    ``init_col()``.  So ``sumpart_col`` lifts every field with ``_c``,
+    never ``F.lit``: a double literal is inlined into generated code, and
+    each query on new terms would compile new classes."""
     return v if isinstance(v, Column) else F.lit(v)
+
+
+def data_fields(w) -> dict[str, float]:
+    """A TermWeight's numeric fields as floats: the per-term state a plan
+    takes as data.  The rest (``BM25Params``, ``wdf_norm``, ``plus``) are
+    the scheme's and shape the formula."""
+    return {
+        f.name: float(v)
+        for f in fields(w)
+        if isinstance(v := getattr(w, f.name), (int, float)) and not isinstance(v, bool)
+    }
+
+
+def over_fields(w, row: Column):
+    """``w`` with each of its ``data_fields`` read from the same-named
+    field of the struct Column ``row``; its ``sumpart_col`` keeps the
+    operations and their order."""
+    return replace(w, **{name: row[name] for name in data_fields(w)})
 
 
 @dataclass(frozen=True)
@@ -83,7 +101,7 @@ class BM25Term:
         scoring hot path)."""
         p = self.params
         normlen = F.greatest(
-            doc_len.cast("double") * F.lit(self.len_factor), F.lit(p.min_normlen)
+            doc_len.cast("double") * _c(self.len_factor), F.lit(p.min_normlen)
         )
         denom = (
             F.lit(p.k1) * (normlen * F.lit(p.b) + F.lit(1 - p.b))
@@ -263,7 +281,7 @@ class _TfIdfTerm(TermWeight):
             wdfn = F.when(wdf > 0, F.sqrt(x - F.lit(0.5)) + F.lit(1.0)).otherwise(0.0)
         else:
             raise ValueError(f"unsupported wdf_norm {w}")
-        return wdfn * _c(self.idfn) * F.lit(self.wqf_factor)
+        return wdfn * _c(self.idfn) * _c(self.wqf_factor)
 
     def maxpart(self, wdf_max: int, doclen_lower_bound: int) -> float:
         return self._wdfn(wdf_max, doclen_lower_bound) * self.idfn * self.wqf_factor
@@ -343,7 +361,7 @@ class _ConstTerm(TermWeight):
         return self.value
 
     def sumpart_col(self, wdf: Column, doc_len: Column, uniqterms=None) -> Column:
-        return F.lit(self.value)
+        return _c(self.value)
 
     def maxpart(self, wdf_max: int, doclen_lower_bound: int) -> float:
         return self.value
@@ -398,12 +416,12 @@ class _BM25PlusTerm(TermWeight):
 
     def sumpart_col(self, wdf: Column, doc_len: Column, uniqterms=None) -> Column:
         normlen = F.greatest(
-            doc_len.cast("double") * F.lit(self.len_factor), F.lit(self.min_normlen)
+            doc_len.cast("double") * _c(self.len_factor), _c(self.min_normlen)
         )
         x = wdf.cast("double")
-        denom = F.lit(self.k1) * (normlen * F.lit(self.b) + F.lit(1 - self.b)) + x
+        denom = _c(self.k1) * (normlen * _c(self.b) + _c(1 - self.b)) + x
         return _c(self.termweight) * (
-            F.lit(self.k1 + 1) * x / denom + F.lit(self.delta)
+            _c(self.k1 + 1) * x / denom + _c(self.delta)
         )
 
     def maxpart(self, wdf_max: int, doclen_lower_bound: int) -> float:
@@ -732,9 +750,9 @@ class _BB2Term(TermWeight):
         Fc = self.F_coll
         wdfn0 = _wdfn_col(wdf, doc_len, self.c_product_avlen)
         wdfn = F.least(wdfn0, _c(Fc) - F.lit(1.0))
-        N_less_2 = 0.0 if self.N_clamped <= 2 else self.N_clamped - 2
+        # init clamps N_clamped to >= 2, so this is the reference's max(N-2, 0)
         y2 = _c(Fc) - wdfn
-        y1 = F.lit(N_less_2) + y2
+        y1 = (_c(self.N_clamped) - F.lit(2.0)) + y2
 
         def stirling(diff, y, const):
             return (y + F.lit(0.5)) * (_c(const) - F.log2(y)) + diff * _c(const)
@@ -743,7 +761,7 @@ class _BB2Term(TermWeight):
             wdfn, y2, self.stirling_constant_2
         )
         B = _c(self.B_constant) / (wdfn + F.lit(1.0))
-        w = B * (F.lit(self.wt) + st)
+        w = B * (_c(self.wt) + st)
         return F.when((wdf > 0) & (w > 0.0), w).otherwise(0.0)
 
     def maxpart(self, wdf_max: int, doclen_lower_bound: int) -> float:
@@ -839,7 +857,7 @@ class _DLHTerm(TermWeight):
             + (ln - x) * F.log2(one_minus)
             + F.lit(0.5) * F.log2(F.lit(2.0 * math.pi) * x * one_minus)
         )
-        out = F.lit(self.wqf_product_factor) * wt / (x + F.lit(0.5))
+        out = _c(self.wqf_product_factor) * wt / (x + F.lit(0.5))
         return F.when((wdf > 0) & (x != ln) & (wt > 0.0), out).otherwise(0.0)
 
     def maxpart(self, wdf_max: int, doclen_lower_bound: int) -> float:
@@ -898,14 +916,14 @@ class _PL2Term(TermWeight):
     P2: float
     doclen_upper_bound: float
     dw: float = 0.0  # PL2+ delta contribution (0 for plain PL2)
-    plus_disabled: bool = False  # PL2+ with mean > 1 → all-zero
+    plus: bool = False  # PL2+: the weight is factor * (P/(wdfn+1) + dw)
 
     def sumpart(self, wdf: float, doc_len: float, uniqterms=None) -> float:
-        if wdf == 0 or self.plus_disabled:
+        if wdf == 0:
             return 0.0
         wdfn = wdf * math.log2(1 + self.cl / doc_len)
         P = self.P1 + (wdfn + 0.5) * math.log2(wdfn) - self.P2 * wdfn
-        if self.dw == 0.0:
+        if not self.plus:
             if P <= 0:
                 return 0.0
             return self.factor * P / (wdfn + 1.0)
@@ -915,18 +933,13 @@ class _PL2Term(TermWeight):
         return self.factor * wt
 
     def sumpart_col(self, wdf: Column, doc_len: Column, uniqterms=None) -> Column:
-        if self.plus_disabled:
-            return F.lit(0.0)
         wdfn = _wdfn_col(wdf, doc_len, self.cl)
         P = (
             _c(self.P1)
             + (wdfn + F.lit(0.5)) * F.log2(wdfn)
             - _c(self.P2) * wdfn
         )
-        # dw is a Column on the PL2+ distributed path — decide the branch
-        # python-side (Column truthiness would raise)
-        plain_pl2 = not isinstance(self.dw, Column) and self.dw == 0.0
-        if plain_pl2:
+        if not self.plus:
             out = _c(self.factor) * P / (wdfn + F.lit(1.0))
             return F.when((wdf > 0) & (P > 0.0), out).otherwise(0.0)
         wt = (P / (wdfn + F.lit(1.0))) + _c(self.dw)
@@ -935,7 +948,7 @@ class _PL2Term(TermWeight):
 
     def maxpart(self, wdf_max: int, doclen_lower_bound: int) -> float:
         # pl2weight.cc / pl2plusweight.cc init upper-bound computation
-        if wdf_max == 0 or self.plus_disabled:
+        if wdf_max == 0:
             return 0.0
         wdfn_lower = math.log2(1 + self.cl / self.doclen_upper_bound)
         divisior = max(wdf_max, doclen_lower_bound, 1)
@@ -1009,21 +1022,18 @@ class PL2PlusScheme:
     def init(self, termfreq, collfreq, stats, wqf=1, factor=1.0, query_length=None):
         base_change = 1.0 / math.log(2.0)
         mean = float(collfreq) / stats["doccount"]
-        if mean > 1:
-            return _PL2Term(
-                factor=0.0, cl=1.0, P1=0.0, P2=0.0,
-                doclen_upper_bound=1.0, plus_disabled=True,
-            )
         P1 = mean * base_change + 0.5 * math.log2(2.0 * math.pi)
         P2 = math.log2(mean) + base_change
         P_delta = P1 + (self.delta + 0.5) * math.log2(self.delta) - P2 * self.delta
         return _PL2Term(
-            factor=factor * wqf,
+            # a zero factor zeroes every sumpart and the bound of an ignored term
+            factor=0.0 if mean > 1 else factor * wqf,
             cl=self.c * stats["avg_length"],
             P1=P1,
             P2=P2,
             doclen_upper_bound=float(stats.get("doclen_upper_bound", 0) or 1),
             dw=P_delta / (self.delta + 1.0),
+            plus=True,
         )
 
     def init_col(self, termfreq, collfreq, stats, wqf=1, factor=1.0, query_length=None):
@@ -1043,6 +1053,7 @@ class PL2PlusScheme:
             P2=P2,
             doclen_upper_bound=float(stats.get("doclen_upper_bound", 0) or 1),
             dw=P_delta / F.lit(d + 1.0),
+            plus=True,
         )
 
 
@@ -1076,7 +1087,7 @@ class _DPHTerm(TermWeight):
             w * (F.log2(wdf_to_len) + _c(self.log_constant))
             + F.lit(0.5) * F.log2(F.lit(2 * math.pi) * w * (F.lit(1.0) - wdf_to_len))
         )
-        out = F.lit(self.wqf_product_factor) * wt
+        out = _c(self.wqf_product_factor) * wt
         return F.when((wdf > 0) & (w != ln) & (wt > 0.0), out).otherwise(0.0)
 
     def maxpart(self, wdf_max: int, doclen_lower_bound: int) -> float:
@@ -1304,7 +1315,7 @@ class _LMAbsDiscountTerm(TermWeight):
         )
         return _c(self.factor) * F.log(
             F.lit(1.0)
-            + (wdf.cast("double") - F.lit(self.delta)) / u * _c(self.multiplier)
+            + (wdf.cast("double") - _c(self.delta)) / u * _c(self.multiplier)
         )
 
     def maxpart(self, wdf_max: int, doclen_lower_bound: int) -> float:
@@ -1383,7 +1394,7 @@ class _LM2StageTerm(TermWeight):
         return _c(self.factor) * F.log(
             F.lit(1.0)
             + wdf.cast("double")
-            / (F.lit(self.lambda_) * doc_len.cast("double") + F.lit(self.mu))
+            / (_c(self.lambda_) * doc_len.cast("double") + _c(self.mu))
             * _c(self.multiplier)
         )
 
@@ -1468,7 +1479,7 @@ class _DiceTerm(TermWeight):
 
     def sumpart_col(self, wdf: Column, doc_len: Column, uniqterms=None) -> Column:
         u = uniqterms.cast("double") if uniqterms is not None else F.lit(1.0)
-        return F.lit(self.numerator) / (F.lit(self.query_length) + u)
+        return _c(self.numerator) / (_c(self.query_length) + u)
 
     def maxpart(self, wdf_max: int, doclen_lower_bound: int) -> float:
         return self.numerator / (self.query_length + self.uniq_lower_bound)

@@ -234,7 +234,8 @@ def lloyd_kmeans(
         schema = f"{id_col} long, " + ", ".join(f"_d{j} double" for j in ks)
         dcols = base.mapInPandas(kern, schema)
         dists = {j: F.round(F.col(f"_d{j}"), round_digits) for j in ks}
-        best = F.least(*dists.values())
+        # F.least needs two columns: k=1, or an update that emptied all but one
+        best = F.least(*dists.values()) if len(dists) > 1 else dists[ks[0]]
         cl = F.lit(max(dists))
         for j in sorted(dists, reverse=True)[1:]:  # smallest index wins ties
             cl = F.when(dists[j] == best, F.lit(j)).otherwise(cl)

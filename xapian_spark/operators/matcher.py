@@ -58,7 +58,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions import codec
-from ..functions.weights import BM25Params
+from ..functions.weights import BM25Params, _c, data_fields, over_fields
 from ..plans import query as Q
 from ..session import local_df
 from .indexer import IndexTables
@@ -228,6 +228,24 @@ def _leaf_fold(pairs: Column) -> Column:
 
 def _pair(o: Column, w: Column) -> Column:
     return F.struct(o.alias("o"), w.alias("w"))
+
+
+def term_fields(rows: dict[str, list[dict]]) -> Column:
+    """``rows[term]`` of each row's ``term``: an array of structs of the
+    given fields, each a number or a Column of literals.  The optimizer
+    folds the map into one constant that generated code holds as a
+    reference, so queries on other terms, with other numbers, run the same
+    generated classes."""
+    return F.create_map(
+        *[
+            x
+            for t, structs in rows.items()
+            for x in (
+                F.lit(t),
+                F.array(*[F.struct(*[_c(v).alias(k) for k, v in s.items()]) for s in structs]),
+            )
+        ]
+    )[F.col("term")]
 
 
 @dataclass
@@ -873,25 +891,25 @@ class Matcher:
     ) -> DataFrame:
         """Term leaves (term, factor, ord) → DF(doc_id, ord, weight), one row
         per (posting, leaf), from ONE decode of their distinct known terms.
-        Each row's (ord, weight) pairs come from a CASE on ``term`` whose
-        branches are the leaves' literal-constant ``sumpart_col``
-        expressions, so every weight equals a per-leaf decode's
-        bit-for-bit; a term under several leaves yields one pair each."""
-        pairs: dict[str, list[Column]] = {}
+        Each leaf's ord and TermWeight fields are data (``term_fields``), and
+        one ``sumpart_col`` over them scores every leaf, so every weight
+        equals a per-leaf decode's bit-for-bit; a term under several leaves
+        yields one row each."""
+        rows: dict[str, list[dict]] = {}
+        w = None
         for leaf, factor, o in leaves:
-            w = self._weight_for(leaf.term, leaf.wqf, factor, stats)
-            if w is not None:
-                part = w.sumpart_col(F.col("wdf"), F.col("doc_len"), self._uniq_col())
-                pairs.setdefault(leaf.term, []).append(_pair(F.lit(o), part))
-        if not pairs:
+            lw = self._weight_for(leaf.term, leaf.wqf, factor, stats)
+            if lw is not None:
+                w = lw
+                rows.setdefault(leaf.term, []).append({"o": o, **data_fields(lw)})
+        if w is None:
             return self._empty().withColumn("ord", F.lit(0))
-        by_term = None
-        for t, ps in pairs.items():
-            hit, arr = F.col("term") == t, F.array(*ps)
-            by_term = F.when(hit, arr) if by_term is None else by_term.when(hit, arr)
-        dec = self._with_uniqterms(self._decoded_for_terms(list(pairs)))
-        return dec.select("doc_id", F.explode(by_term).alias("p")).select(
-            "doc_id", F.col("p.o").alias("ord"), F.col("p.w").alias("weight")
+        dec = self._with_uniqterms(self._decoded_for_terms(list(rows)))
+        part = over_fields(w, F.col("p")).sumpart_col(
+            F.col("wdf"), F.col("doc_len"), self._uniq_col()
+        )
+        return dec.withColumn("p", F.explode(term_fields(rows))).select(
+            "doc_id", F.col("p.o").alias("ord"), part.alias("weight")
         )
 
     def _empty(self) -> DataFrame:
@@ -1325,42 +1343,24 @@ class Matcher:
         # term-slot sequence (with repeats) indexing into plists
         slot_of = [order_map[t] for t in terms]
         check = _make_window_check(slot_of, window, isinstance(q, Q.Phrase))
-        term_order = F.create_map(
-            *[x for t, i in order_map.items() for x in (F.lit(t), F.lit(i))]
-        )
-        leaf_slots = F.create_map(
-            *[
-                x
-                for t in order_map
-                for x in (
-                    F.lit(t),
-                    F.array(*[F.lit(j) for j, u in enumerate(terms) if u == t]),
-                )
-            ]
-        )
         # Weight like AND of the terms (PhrasePostList wraps an AndPostList):
-        # the per-term sumpart Column is CASE-dispatched on term, then each
-        # row contributes one (leaf position, weight) pair per occurrence.
-        wexpr = None
-        for t in order_map:
-            part = self._weight_for(t, 1, factor, stats).sumpart_col(
-                F.col("wdf"), F.col("doc_len"), self._uniq_col()
-            )
-            wexpr = (
-                part
-                if wexpr is None
-                else F.when(F.col("term") == t, part).otherwise(wexpr)
-            )
+        # one struct per occurrence of a term (its slot ``tord``, its leaf
+        # position ``o``, its TermWeight fields); the weight is computed
+        # once per row and paired with each occurrence's position.
+        w = {t: self._weight_for(t, 1, factor, stats) for t in order_map}
+        occ = term_fields({
+            t: [{"o": j, "tord": i, **data_fields(w[t])} for j, u in enumerate(terms) if u == t]
+            for t, i in order_map.items()
+        })
+        part = over_fields(w[terms[0]], F.col("_occ")[0]).sumpart_col(
+            F.col("wdf"), F.col("doc_len"), self._uniq_col()
+        )
         dec = (
             self._with_uniqterms(self._decoded_for_terms(terms, with_positions=True))
-            .withColumn("tord", term_order[F.col("term")])
-            .withColumn("_w", wexpr)
-            .withColumn(
-                "_ow",
-                F.transform(
-                    leaf_slots[F.col("term")], lambda j: _pair(j, F.col("_w"))
-                ),
-            )
+            .withColumn("_occ", occ)
+            .withColumn("tord", F.col("_occ")[0]["tord"])
+            .withColumn("_w", part)
+            .withColumn("_ow", F.transform("_occ", lambda x: _pair(x["o"], F.col("_w"))))
         )
         g = dec.groupBy("doc_id").agg(
             F.count("*").alias("npresent"),

@@ -36,10 +36,10 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.weights import BM25Params, BM25Term
+from ..functions.weights import BM25Params, BM25Term, data_fields, over_fields
 from ..session import local_df
 from .indexer import TIER_SHIFT
-from .matcher import decode_blocks
+from .matcher import decode_blocks, term_fields
 
 # phase 1 scores this many highest-bound blocks per term exactly to seed θ
 PROBE_BLOCKS_PER_TERM = 4
@@ -87,50 +87,54 @@ def wand_topk(
             )
         return local_df(spark, [], "doc_id long, weight double")
 
-    # Per-term constants attach as literal CASE columns, NOT a broadcast
-    # join: a query has a handful of terms, and every F.broadcast(consts)
-    # reference used to cost its own broadcast-exchange job — at small
-    # corpus sizes those fixed jobs dominated the entry latency.
-    consts_v = {
-        t: (
-            float(term_weights[t].termweight),
-            float(term_weights[t].len_factor),
-            float(term_weights[t].maxpart(term_stats[t][2], doclen_lower_bound)),
-        )
+    # Per-term constants are data keyed by term (``term_fields``): a
+    # broadcast join would cost a job per reference, and a double literal
+    # is inlined into generated code, so each query would compile new
+    # classes.  The query-wide scalars ride in every term's entry, since
+    # only a lookup keyed by a column stays data.
+    gmax_of = {
+        t: float(term_weights[t].maxpart(term_stats[t][2], doclen_lower_bound))
         for t in terms
     }
+    total_gmax = float(sum(gmax_of.values()))
+    # Exclusion decisions must be conservative under float64 noise: the
+    # upper bounds are sums whose summation order differs between the
+    # driver (total_gmax) and executors (missing/rest), so two
+    # mathematically-equal quantities can differ by an ulp.  Slack all
+    # "cannot beat θ" comparisons by a relative epsilon.
+    eps = 1e-9 * (1.0 + abs(total_gmax))
+    consts = {
+        t: {**data_fields(term_weights[t]), "gmax": gmax_of[t], "total": total_gmax, "eps": eps}
+        for t in terms
+    }
+    w_row = over_fields(term_weights[terms[0]], F.col("c"))
 
-    def _case_col(idx):
-        expr = F.lit(consts_v[terms[-1]][idx])
-        for t in terms[-2::-1]:
-            expr = F.when(F.col("term") == t, F.lit(consts_v[t][idx])).otherwise(expr)
-        return expr
+    def with_consts(df, extra=None):
+        """``df`` with its term's constants (plus ``extra[term]``) in ``c``."""
+        rows = {t: [{**v, **(extra or {}).get(t, {})}] for t, v in consts.items()}
+        return df.withColumn("c", term_fields(rows)[0])
 
-    def with_consts(df):
-        return (
-            df.withColumn("tw", _case_col(0))
-            .withColumn("lf", _case_col(1))
-            .withColumn("gmax", _case_col(2))
-        )
+    def with_bound(df):
+        # rest = best any doc in this block could gain from the OTHER terms
+        return df.withColumn(
+            "bound",
+            _bound_col(
+                params, F.col("c.termweight"), F.col("c.len_factor"),
+                F.col("max_wdf"), F.col("min_doclen"),
+            ),
+        ).withColumn("rest", F.col("c.total") - F.col("c.gmax"))
 
-    total_gmax = float(sum(v[2] for v in consts_v.values()))
     # every decode below reads a subset of these terms' postings, so their
     # Σ termfreq sizes its partitions (decode_blocks ``postings``)
     postings_n = sum(term_stats[t][0] for t in terms)
 
-    meta = (
+    meta = with_bound(
         with_consts(
             postings.filter(F.col("term").isin(terms)).select(
                 "term", "block_no", "n", "max_wdf", "min_doclen",
                 "first_docid", "last_docid",
             )
         )
-        .withColumn(
-            "bound",
-            _bound_col(params, F.col("tw"), F.col("lf"), F.col("max_wdf"), F.col("min_doclen")),
-        )
-        # rest = best any doc in this block could gain from the OTHER terms
-        .withColumn("rest", F.lit(total_gmax) - F.col("gmax"))
     ).persist()
 
     # ---- Phase 1: ONE collect serves θ AND the tier table ----
@@ -145,7 +149,7 @@ def wand_topk(
         .select("term", "block_no")
     )
     probe_blocks = postings.join(F.broadcast(probe_keys), ["term", "block_no"], "left_semi")
-    probe_scores = _score_decoded(probe_blocks, with_consts, params, postings_n)
+    probe_scores = _score_decoded(probe_blocks, with_consts, w_row, postings_n)
     probe_part = (
         probe_scores.groupBy("doc_id")
         .agg(F.sum("s").alias("p"))
@@ -184,23 +188,11 @@ def wand_topk(
         if r["kind"] == "tier"
     ]
 
-    # Exclusion decisions must be conservative under float64 noise: the
-    # upper bounds are sums whose summation order differs between the
-    # driver (total_gmax) and executors (seen_gmax/rest), so two
-    # mathematically-equal quantities can differ by an ulp.  Slack all
-    # "cannot beat θ" comparisons by a relative epsilon.
-    eps = 1e-9 * (1.0 + abs(total_gmax))
-
     # ---- Phase 2: prune blocks that cannot beat θ ----
-    gmax_of = {
-        t: float(term_weights[t].maxpart(term_stats[t][2], doclen_lower_bound))
-        for t in terms
-    }
     may_prune = False
+    survive = None
+    attach = with_consts
     if math.isfinite(theta):
-        # Rule A (per-block): bound(b) + Σ_{t'≠t} gmax_{t'} < θ.  Useless
-        # for OR queries whose other term is hot (rest alone ≈ θ).
-        survive = F.col("bound") + F.col("rest") >= F.lit(theta - eps)
         # Rule B (tier combination): pick per-term impact-tier cutoffs whose
         # sup-bounds SUM below θ.  A doc living only in pruned tiers scores
         # ≤ Σ_t sup_t < θ; a doc seen in any surviving block is exactly
@@ -209,14 +201,22 @@ def wand_topk(
         # is below θ by rule A's own bound, else all its blocks are
         # rule-B-pruned and the sum bound applies.
         tier_cut = _tier_cutoffs(tier_rows, theta - eps)
-        if tier_cut:
-            t_expr = F.lit(False)
-            for t, tier in tier_cut:
-                t_expr = t_expr | (
-                    (F.col("term") == t)
-                    & (F.shiftright(F.col("block_no"), TIER_SHIFT) == tier)
-                )
-            survive = survive & ~t_expr
+        phase2 = {
+            t: {
+                "theta_eps": theta - eps,
+                "cut": F.array(*[F.lit(x) for u, x in tier_cut if u == t]).cast("array<long>"),
+            }
+            for t in terms
+        }
+
+        def attach(df):
+            return with_consts(df, phase2)
+
+        # Rule A (per-block): bound(b) + Σ_{t'≠t} gmax_{t'} < θ.  Useless
+        # for OR queries whose other term is hot (rest alone ≈ θ).
+        survive = (F.col("bound") + F.col("rest") >= F.col("c.theta_eps")) & ~F.array_contains(
+            F.col("c.cut"), F.shiftright(F.col("block_no"), TIER_SHIFT)
+        )
         # exact phase-3 gate from the already-collected tier table: rule A
         # prunes ≥1 block iff some tier's MIN bound plus that term's rest
         # is below θ (rest = total_gmax − gmax_t, a per-term constant)
@@ -224,14 +224,12 @@ def wand_topk(
             minb + (total_gmax - gmax_of[t]) < theta - eps
             for t, _, _, minb, _ in tier_rows
         )
-    else:
-        survive = None
     if stats_out is not None:
         # exact pruning telemetry costs ONE extra tiny aggregation job —
         # only runs when the caller asks for it (tests / bench audits)
         stats_out["theta"] = theta
-        if math.isfinite(theta):
-            srow = meta.agg(
+        if survive is not None:
+            srow = attach(meta).agg(
                 F.count("*").alias("tot"),
                 F.sum(F.when(survive, 0).otherwise(1)).alias("pr"),
             ).collect()[0]
@@ -245,15 +243,9 @@ def wand_topk(
     # broadcast-exchange job.  (Same IO either way: survivors' binary
     # columns must be read regardless; pruned blocks' binaries are never
     # decoded.)
-    base_post = with_consts(postings.filter(F.col("term").isin(terms)))
+    base_post = postings.filter(F.col("term").isin(terms))
     if survive is not None:
-        scored_post = base_post.withColumn(
-            "bound",
-            _bound_col(
-                params, F.col("tw"), F.col("lf"),
-                F.col("max_wdf"), F.col("min_doclen"),
-            ),
-        ).withColumn("rest", F.lit(total_gmax) - F.col("gmax"))
+        scored_post = with_bound(attach(base_post))
         surv_blocks = scored_post.filter(survive)
         pruned_all = scored_post.filter(~survive)
     else:
@@ -265,16 +257,19 @@ def wand_topk(
         # per-posting scores ARE per-doc totals: skip the groupBy shuffle
         # (and the persist — phase 3 never re-reads single-term partials),
         # making the scoring phase decode → TakeOrderedAndProject only
-        partials = _score_decoded(surv_blocks, with_consts, params, postings_n).select(
+        partials = _score_decoded(surv_blocks, attach, w_row, postings_n).select(
             "doc_id", F.col("s").alias("partial")
         )
     else:
         partials = (
-            _score_decoded(surv_blocks, with_consts, params, postings_n)
+            _score_decoded(surv_blocks, attach, w_row, postings_n)
             .groupBy("doc_id")
             .agg(
                 F.sum("s").alias("partial"),
-                F.sum("gmax").alias("seen_gmax"),
+                # the most the doc can gain from the terms it was not seen
+                # in: total_gmax − Σ gmax over the terms it was seen in
+                (F.max("c.total") - F.sum("c.gmax")).alias("missing"),
+                F.max("c.eps").alias("eps"),
             )
         ).persist()
 
@@ -313,11 +308,8 @@ def wand_topk(
             .filter(
                 (F.col("nk") < F.lit(k))
                 | (
-                    F.col("partial")
-                    + F.greatest(
-                        F.lit(total_gmax) - F.col("seen_gmax"), F.lit(0.0)
-                    )
-                    >= F.col("theta2") - F.lit(eps)
+                    F.col("partial") + F.greatest(F.col("missing"), F.lit(0.0))
+                    >= F.col("theta2") - F.col("eps")
                 )
             )
             .select("doc_id", "partial")
@@ -333,7 +325,7 @@ def wand_topk(
             "left_semi",
         )
         extra = (
-            _score_decoded(extra_blocks, with_consts, params, postings_n)
+            _score_decoded(extra_blocks, attach, w_row, postings_n)
             .join(F.broadcast(cand_ids_df), "doc_id", "left_semi")
             .groupBy("doc_id")
             .agg(F.sum("s").alias("extra"))
@@ -429,16 +421,13 @@ def _tier_cutoffs(
     return out
 
 
-def _score_decoded(
-    blocks: DataFrame, with_consts, params: BM25Params, postings: int
-) -> DataFrame:
+def _score_decoded(blocks: DataFrame, attach, w: BM25Term, postings: int) -> DataFrame:
     """Decode blocks → per-posting BM25 sumpart Column (bm25weight.cc:166-178).
 
-    ``with_consts`` re-attaches the per-term constants as literal CASE
-    columns (decode_blocks keeps only the core posting columns);
+    ``attach`` re-attaches the per-term constants ``c`` (decode_blocks
+    keeps only the core posting columns), whose fields ``w`` reads;
     ``postings`` bounds the blocks' postings and sizes the decode."""
-    dec = with_consts(decode_blocks(blocks, postings=postings))
-    w = BM25Term(F.col("tw"), F.col("lf"), params)
+    dec = attach(decode_blocks(blocks, postings=postings))
     return dec.select(
-        "doc_id", "gmax", w.sumpart_col(F.col("wdf"), F.col("doc_len")).alias("s")
+        "doc_id", "c", w.sumpart_col(F.col("wdf"), F.col("doc_len")).alias("s")
     )

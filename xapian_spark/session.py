@@ -89,7 +89,13 @@ def get_spark(
       (~0.2 core-s per task, see that module).  Workers must therefore
       import ``xapian_spark``, as every engine kernel already requires: the
       package root is appended to the workers' PYTHONPATH, after any
-      ``spark.executorEnv.PYTHONPATH`` the caller passes.
+      ``spark.executorEnv.PYTHONPATH`` the caller passes;
+    - a codegen cache of 512 classes (``spark.sql.codegen.cache.maxEntries``
+      is static, so it is set here, never in a query).  A query's per-term
+      constants are data (``matcher.term_fields``), so a query on new terms
+      reuses the classes of its shape, unless the cache evicted them:
+      Spark's default of 100 does, and 512 is the smallest power of two at
+      which ``tools/codegen_probe.py`` finds no class compiled twice.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -133,6 +139,7 @@ def get_spark(
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
         .config("spark.python.daemon.module", "xapian_spark.pydaemon")
+        .config("spark.sql.codegen.cache.maxEntries", "512")
     )
     extra_conf = dict(extra_conf or {})
     worker_path = [extra_conf.pop(_WORKER_PYTHONPATH, ""), _PACKAGE_ROOT]
