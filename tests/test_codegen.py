@@ -39,10 +39,6 @@ WAND = (
     O([T("return"), T("if"), T("binary_search")]),
     O([T("def"), T("self"), T("merge_sort")]),
 )
-#: classes the WAND query on other terms compiled when every per-term
-#: constant, θ and the tier cutoffs were inlined literals (same fixture,
-#: same codegen cache size)
-WAND_COMPILES_INLINED = 8
 
 
 def _compiles(spark) -> int:
@@ -70,7 +66,7 @@ def test_same_shape_on_other_terms_compiles_nothing(shape, spark, index):
     assert _second_query_compiles(spark, run, *SHAPES[shape]) == 0
 
 
-def test_wand_compiles_half_of_inlined(spark, index):
+def test_wand_on_other_terms_compiles_nothing(spark, index):
     from xapian_spark.operators.matcher import Matcher
 
     m = Matcher(spark, index)
@@ -79,4 +75,19 @@ def test_wand_compiles_half_of_inlined(spark, index):
         m.mset_df(q, 10, prune=True).collect()
         assert m.last_prune_decision == "pruned"
 
-    assert _second_query_compiles(spark, run, *WAND) * 2 <= WAND_COMPILES_INLINED
+    assert _second_query_compiles(spark, run, *WAND) == 0
+
+
+def test_lm_synonym_on_other_terms_compiles_nothing(spark, index):
+    """A language-model scheme's init reads the synonym's merged collfreq:
+    the second query compiled 2 classes while that sum was a long literal
+    in the plan."""
+    from xapian_spark.functions.weights import LMJMScheme
+    from xapian_spark.operators.matcher import Matcher
+
+    m = Matcher(spark, index, scheme=LMJMScheme())
+
+    def run(q):
+        m.mset(q, maxitems=10).df.collect()
+
+    assert _second_query_compiles(spark, run, *SHAPES["synonym"]) == 0

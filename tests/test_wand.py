@@ -1,9 +1,15 @@
 """Block-max WAND pruning: exactness vs the exhaustive path (the soaktest
 top-k-prefix/equality property with pruning ON — soaktest_queries.cc:180-240),
 plus a check that pruning actually skips block decodes.
+
+The pruned path folds each doc's parts in query leaf order with the
+exhaustive path's operations, so its rows equal the exhaustive rows exactly:
+the same doc ids, the same weights bit for bit (``float.hex``).
 """
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from xapian_spark.plans import query as Q
 
@@ -19,13 +25,94 @@ CASES = [
 ]
 
 
+def _rows(df):
+    return [(r["doc_id"], r["weight"].hex()) for r in df.collect()]
+
+
+def _assert_pruned_is_exhaustive(m, q, k):
+    exact = _rows(m.mset_df(q, k))
+    pruned = _rows(m.mset_df(q, k, prune=True))
+    assert m.last_prune_decision == "pruned"
+    assert pruned == exact, (q, k)
+
+
 @pytest.mark.parametrize("name,q,k", CASES, ids=[c[0] for c in CASES])
 def test_wand_equals_exhaustive(name, q, k, matcher):
-    exact = [(r["doc_id"], r["weight"]) for r in matcher.mset_df(q, k).collect()]
-    pruned = [(r["doc_id"], r["weight"]) for r in matcher.mset_df(q, k, prune=True).collect()]
-    assert [d for d, _ in exact] == [d for d, _ in pruned]
-    for (_, we), (_, wp) in zip(exact, pruned):
-        assert abs(we - wp) < 1e-9
+    _assert_pruned_is_exhaustive(matcher, q, k)
+
+
+@pytest.fixture(scope="module")
+def tiered(spark, corpus):
+    """An impact-tiered index with small blocks: several tiers and many
+    blocks per term, so bounds fall from tier to tier."""
+    from xapian_spark.operators.indexer import build_index
+    from xapian_spark.operators.matcher import Matcher
+
+    ix = build_index(spark, corpus, meta_cols=["lang"], impact_tiers=4, block_size=16)
+    ix.postings = ix.postings.persist()
+    yield Matcher(spark, ix)
+    ix.postings.unpersist()
+
+
+def _vocab(m):
+    """(hot, all): the 20 highest-termfreq terms, and every term."""
+    rows = m.index.dictionary.orderBy("termfreq", ascending=False).select("term").collect()
+    terms = [r["term"] for r in rows]
+    return terms[:20], terms
+
+
+def _check_random_ors(m, first_hot: bool = False):
+    """Random ORs of 1-5 distinct terms (sometimes with one unknown term)
+    at k ∈ {1, 3, 10, 1000}: pruned rows equal exhaustive rows exactly."""
+    hot, vocab = _vocab(m)
+    pool = st.one_of(st.sampled_from(hot), st.sampled_from(vocab))
+
+    @settings(
+        max_examples=20, deadline=None, derandomize=True,
+        suppress_health_check=[HealthCheck.too_slow],
+    )
+    @given(
+        terms=st.lists(pool, min_size=1, max_size=5, unique=True),
+        first=st.sampled_from(hot),
+        unknown=st.one_of(st.none(), st.integers(0, 5)),
+        k=st.sampled_from([1, 3, 10, 1000]),
+    )
+    def prop(terms, first, unknown, k):
+        if first_hot:
+            terms = [first] + [t for t in terms if t != first][:4]
+        leaves = [Q.Term(t) for t in terms]
+        if unknown is not None:
+            leaves.insert(min(unknown, len(leaves)), Q.Term("zzz_unknown"))
+        q = Q.Or(leaves) if len(leaves) > 1 else leaves[0]
+        _assert_pruned_is_exhaustive(m, q, k)
+
+    prop()
+
+
+def test_wand_random_ors_equal_exhaustive(matcher):
+    _check_random_ors(matcher)
+
+
+def test_wand_random_ors_equal_exhaustive_tiered(tiered):
+    _check_random_ors(tiered)
+
+
+def test_wand_random_ors_equal_exhaustive_across_ranges(matcher, monkeypatch):
+    """With a small per-task posting budget every query has R ≥ 3 docid
+    ranges (its first term is one of the 20 hottest), and blocks straddle
+    range edges: each range must still rank its docs' complete weights."""
+    from pyspark.sql import functions as F
+
+    from xapian_spark.operators import wand
+
+    monkeypatch.setattr(wand, "DECODE_POSTINGS_PER_TASK", 40)
+    hot, _ = _vocab(matcher)
+    assert min(ts[0] for ts in matcher._term_stats(hot).values()) >= 80
+    st_ = {}
+    matcher._wand([(t, 1) for t in hot[:2]], 3, stats_out=st_).collect()
+    blocks = matcher.index.postings.filter(F.col("term").isin(hot[:2])).count()
+    assert st_["blocks_total"] > blocks, st_  # some block lies in several ranges
+    _check_random_ors(matcher, first_hot=True)
 
 
 def test_wand_prunes_blocks(spark, matcher, index, oracle):
@@ -33,46 +120,35 @@ def test_wand_prunes_blocks(spark, matcher, index, oracle):
     full block set (otherwise the kernel is a no-op)."""
     from pyspark.sql import functions as F
 
-    from xapian_spark.functions.weights import BM25Params
-    from xapian_spark.operators.wand import _bound_col
-
     terms = ["return", "binary_search"]
     stats = matcher._term_stats(terms)
     weights = {t: matcher._weight_for(t, 1, 1.0, stats) for t in terms}
-    total = index.postings.filter(F.col("term").isin(terms)).count()
     # run with tiny k → tight θ → pruning must engage on this corpus
     res = matcher.mset_df(Q.Or([Q.Term(t) for t in terms]), 3, prune=True)
     assert res.count() == 3
     # directly assert some block bound is below the achievable θ
-    consts = spark.createDataFrame(
-        [(t, weights[t].termweight, weights[t].len_factor) for t in terms],
-        "term string, tw double, lf double",
-    )
     meta = (
         index.postings.filter(F.col("term").isin(terms))
-        .join(F.broadcast(consts), "term")
-        .withColumn(
-            "bound",
-            _bound_col(BM25Params(), F.col("tw"), F.col("lf"), F.col("max_wdf"), F.col("min_doclen")),
+        .select("term", "max_wdf", "min_doclen")
+        .toPandas()
+    )
+    bounds = sorted(
+        b
+        for t in terms
+        for b in weights[t].maxpart(
+            meta.loc[meta.term == t, "max_wdf"].to_numpy(),
+            meta.loc[meta.term == t, "min_doclen"].to_numpy(),
         )
     )
-    bounds = sorted(r["bound"] for r in meta.select("bound").collect())
-    assert total > 1 and bounds[0] < bounds[-1]  # bounds discriminate blocks
+    assert len(meta) > 1 and bounds[0] < bounds[-1]  # bounds discriminate blocks
 
 
-def test_impact_tiered_layout_prunes_and_stays_exact(spark, corpus):
+def test_impact_tiered_layout_prunes_and_stays_exact(tiered):
     """An index built with impact_tiers > 1 must (a) return the same top-k
     as the exhaustive path and (b) actually prune blocks on a hot single
     term — on the docid-ordered layout every block contains a high-impact
     posting and the measured prune rate is zero (see indexer docstring)."""
-    from xapian_spark.operators.indexer import build_index
-    from xapian_spark.operators.matcher import Matcher
-
-    ix = build_index(
-        spark, corpus, meta_cols=["lang"], impact_tiers=4, block_size=16
-    )
-    ix.postings = ix.postings.persist()
-    m = Matcher(spark, ix)
+    m = tiered
     q = Q.Term("value")  # mid-Zipf: wdf spans the tier thresholds
     exact = [(r["doc_id"], round(r["weight"], 9)) for r in m.mset_df(q, 3).collect()]
     st = {}
@@ -82,7 +158,6 @@ def test_impact_tiered_layout_prunes_and_stays_exact(spark, corpus):
     ]
     assert exact == pruned
     assert st["blocks_pruned"] > 0, st
-    ix.postings.unpersist()
 
 
 def test_impact_tiers_reject_sparse_docid_space(spark, corpus):

@@ -375,11 +375,11 @@ _register(
     _q_wand_topk(Q.Or([Q.Term("hash"), Q.Term("join")]), 20),
     _bm25_sql(["hash", "join"], _topk_body(20)),
 )
-# prune='auto' twins: the wand_* entries above PIN the pruned kernel for
-# coverage (at sf≤0.1 it is below its own measured ~10^8-posting crossover
-# — BENCH/BASELINE.md); these report what production would actually run,
-# the auto decision's latency (VERDICT r05 #5).  Same oracles — the paths
-# are rank-identical by construction.
+# prune='auto' twins: the wand_* entries above PIN the pruned kernel;
+# these run whichever path the auto decision takes — the kernel once the
+# query's Σ termfreq reaches Matcher.WAND_AUTO_MIN_POSTINGS (3×10^4), the
+# exhaustive plan below it (VERDICT r05 #5).  Same oracles: the two paths
+# return the same rows bit for bit.
 _register(
     "bm25_wand_auto_hot",
     _q_wand_topk(Q.Term("the"), 20, prune="auto"),

@@ -25,6 +25,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass, fields, replace
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -77,20 +78,26 @@ class BM25Term:
     len_factor: float
     params: BM25Params
 
-    def sumpart(self, wdf: float, doc_len: float, uniqterms=None) -> float:
-        """bm25weight.cc:166-178."""
+    def sumpart(self, wdf, doc_len, uniqterms=None):
+        """bm25weight.cc:166-178.  ``wdf`` and ``doc_len`` are numbers or
+        numpy arrays (one posting per element), with ``sumpart_col``'s
+        operations in its order, so each element equals the Column's value
+        bit for bit."""
         p = self.params
-        normlen = max(doc_len * self.len_factor, p.min_normlen)
-        denom = p.k1 * (normlen * p.b + (1 - p.b)) + float(wdf)
-        return self.termweight * (float(wdf) / denom)
+        normlen = np.maximum(doc_len * self.len_factor, p.min_normlen)
+        wdf = wdf * 1.0
+        denom = p.k1 * (normlen * p.b + (1 - p.b)) + wdf
+        return self.termweight * (wdf / denom)
 
-    def maxpart(self, wdf_max: int, doclen_lower_bound: int) -> float:
-        """bm25weight.cc:180-202 — the block-max/WAND bound."""
+    def maxpart(self, wdf_max, doclen_lower_bound):
+        """bm25weight.cc:180-202 — the block-max/WAND bound.  Numbers or
+        numpy arrays: per block, ``wdf_max`` is its max_wdf and
+        ``doclen_lower_bound`` its min_doclen."""
         p = self.params
         denom = p.k1
         if p.k1 != 0.0 and p.b != 0.0:
-            normlen_lb = max(
-                max(wdf_max, doclen_lower_bound) * self.len_factor, p.min_normlen
+            normlen_lb = np.maximum(
+                np.maximum(wdf_max, doclen_lower_bound) * self.len_factor, p.min_normlen
             )
             denom *= normlen_lb * p.b + (1 - p.b)
         denom += wdf_max

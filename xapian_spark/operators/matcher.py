@@ -97,13 +97,37 @@ DECODED_SCHEMA = StructType(
 DECODE_POSTINGS_PER_TASK = 100_000
 
 
+def decode_batch(pdf: pd.DataFrame, with_positions: bool = False) -> dict[str, np.ndarray]:
+    """One batch of posting blocks (``n``, ``docids``, ``wdfs``,
+    ``doclens``[, ``pos_counts``, ``positions``]) → its postings' doc_id,
+    wdf, doc_len[ and positions] arrays, block after block: one
+    ``codec.decode_segments`` call per coded column over the batch's joined
+    bytes.  Inverse of ``indexer._pack_partition``."""
+    n = pdf["n"].to_numpy(dtype=np.int64)
+
+    def decoded(col: str, counts: np.ndarray, delta: bool) -> np.ndarray:
+        return codec.decode_segments(b"".join(pdf[col].tolist()), counts, delta)
+
+    cols = {
+        "doc_id": decoded("docids", n, True).astype(np.int64),
+        "wdf": decoded("wdfs", n, False).astype(np.int32),
+        "doc_len": decoded("doclens", n, False).astype(np.int32),
+    }
+    if with_positions:
+        npos = decoded("pos_counts", n, False).astype(np.int64)
+        flat = decoded("positions", npos, True).astype(np.int32)
+        bounds = np.concatenate(([0], np.cumsum(npos))).tolist()
+        cols["positions"] = np.empty(len(npos), dtype=object)
+        cols["positions"][:] = [flat[lo:hi] for lo, hi in zip(bounds[:-1], bounds[1:])]
+    return cols
+
+
 def decode_blocks(
     blocks: DataFrame, with_positions: bool = False, postings: int | None = None
 ) -> DataFrame:
-    """Posting blocks → (term, doc_id, wdf, doc_len[, positions]) rows.
+    """Posting blocks → (term, doc_id, wdf, doc_len[, positions]) rows, one
+    ``decode_batch`` per Arrow batch.
 
-    Inverse of ``indexer._pack_partition``: one ``codec.decode_segments``
-    call per coded column per Arrow batch, over the batch's joined bytes.
     ``postings``: how many postings ``blocks`` holds at most, when the
     caller knows it from dictionary stats — the decode then runs on
     ``postings // DECODE_POSTINGS_PER_TASK + 1`` partitions.  Full-table
@@ -119,27 +143,10 @@ def decode_blocks(
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             n = pdf["n"].to_numpy(dtype=np.int64)
-
-            def decoded(col: str, counts: np.ndarray, delta: bool) -> np.ndarray:
-                return codec.decode_segments(b"".join(pdf[col].tolist()), counts, delta)
-
-            if with_positions:
-                npos = decoded("pos_counts", n, False).astype(np.int64)
-                flat = decoded("positions", npos, True).astype(np.int32)
-                bounds = np.concatenate(([0], np.cumsum(npos))).tolist()
-                positions = np.empty(len(npos), dtype=object)
-                positions[:] = [flat[lo:hi] for lo, hi in zip(bounds[:-1], bounds[1:])]
-            else:
-                positions = np.full(int(n.sum()), None, dtype=object)
-            yield pd.DataFrame(
-                {
-                    "term": np.repeat(pdf["term"].to_numpy(dtype=object), n),
-                    "doc_id": decoded("docids", n, True).astype(np.int64),
-                    "wdf": decoded("wdfs", n, False).astype(np.int32),
-                    "doc_len": decoded("doclens", n, False).astype(np.int32),
-                    "positions": positions,
-                }
-            )
+            cols = decode_batch(pdf, with_positions)
+            if not with_positions:
+                cols["positions"] = np.full(int(n.sum()), None, dtype=object)
+            yield pd.DataFrame({"term": np.repeat(pdf["term"].to_numpy(dtype=object), n), **cols})
 
     return blocks.mapInPandas(_decode, DECODED_SCHEMA)
 
@@ -615,12 +622,15 @@ class Matcher:
             return w.maxpart(wdf_max, dlb)
         return 0.0
 
-    #: ``prune='auto'`` crossover: the pruned path's fixed job overhead
-    #: (θ+tier collect, AQE stage materializations, rescore joins) beats
-    #: exhaustive decode only when the query's posting lists are ≥ ~10^8
-    #: entries (measured r04, BENCH/BASELINE.md "WAND crossover") — two
-    #: orders past the bench corpus, exactly the 10^12-doc regime.
-    WAND_AUTO_MIN_POSTINGS = 100_000_000
+    #: ``prune='auto'`` crossover, in Σ termfreq of the query's terms.
+    #: Measured on ``corpus_df`` indexes with ``impact_tiers=4`` (local[4],
+    #: 4-vCPU host, 3 interleaved warm runs of ``tools/wand_crossover.py``,
+    #: output under ``BENCH/``): at 3.1-3.3×10^4 postings the one-job
+    #: kernel (``operators/wand.py``) took 0.57 vs 0.75 core-s on a hot
+    #: term and 0.38 vs 0.78 on hot OR mid; at 3.1-3.3×10^5 it tied on the
+    #: hot term (1.14 vs 1.06, R = 4 ranges) and took 0.77 vs 1.93 on the
+    #: OR.  Smaller queries were not measured there and stay exhaustive.
+    WAND_AUTO_MIN_POSTINGS = 30_000
 
     def mset_df(
         self,
@@ -635,13 +645,14 @@ class Matcher:
         block-max WAND kernel (operators/wand.py): same top-k, but hot-term
         posting blocks that cannot beat the running θ are never decoded —
         the maxweight pruning of matcher/postlisttree.h:131-190 at block
-        granularity.  Scores may differ from the exhaustive path only in
-        float64 summation order (≤1 ulp per term).
+        granularity.  Its rows equal the exhaustive path's bit for bit:
+        each weight is folded in query leaf order with the same operations.
 
         ``prune='auto'`` picks per-query from dictionary stats (no extra
         Spark job — the same memoized termfreq lookup every scheme's init
         needs): pruned only when Σ termfreq ≥ ``WAND_AUTO_MIN_POSTINGS``,
-        i.e. when decode volume dwarfs the pruned path's fixed overhead.
+        the smallest posting volume at which the kernel was measured no
+        slower than the exhaustive plan.
         The choice taken is recorded in ``self.last_prune_decision``
         (per calling thread).
         """
@@ -705,16 +716,15 @@ class Matcher:
             w = self._weight_for(t, wqf, 1.0, stats)
             if w is not None:
                 weights[t] = w
-        # The kernel's bound/score columns encode the BM25 formula with the
-        # SCHEME's params (which may differ from self.params, e.g. Trad).
+        # each BM25Term carries the SCHEME's params (which may differ from
+        # self.params, e.g. Trad); ``weights`` keeps the query leaf order
         return wand_topk(
             self.spark,
             self.index.postings,
             weights,
-            stats,
-            self.index.stats["doclen_lower_bound"],
+            sum(stats[t][0] for t in weights),
+            self.index.stats["doccount"],
             k,
-            self.scheme.params,
             stats_out=stats_out,
         )
 
@@ -1283,12 +1293,18 @@ class Matcher:
         known = [t for t in dict.fromkeys(q.terms()) if t in stats]
         if not known:
             return self._empty()
+        # The merged collfreq is data (a term-keyed map, ``term_fields``)
+        # carried through the aggregate: a long literal would be inlined
+        # into generated code for the schemes that read it (DFR/LM).
+        collfreq = sum(stats[t][1] for t in known)
+        cf = term_fields({t: [{"cf": collfreq}] for t in known})
         merged = (
             self._decoded_for_terms(known)
             .groupBy("doc_id")
             .agg(
                 F.sum("wdf").cast("long").alias("wdf_sum"),
                 F.max("doc_len").cast("long").alias("doc_len"),
+                F.max(cf[0]["cf"]).alias("_syn_cf"),
             )
             # wdf capped by doc_len (synonympostlist.cc get_wdf semantics)
             .withColumn("wdf", F.least(F.col("wdf_sum"), F.col("doc_len")))
@@ -1312,7 +1328,7 @@ class Matcher:
             tf = F.col("_syn_tf")
         w = self.scheme.init_col(
             tf,
-            F.lit(sum(stats[t][1] for t in known)),
+            F.col("_syn_cf"),
             self.index.stats,
             wqf=1,
             factor=factor,
